@@ -125,11 +125,7 @@ def sql_band_hash(b: int, rows_per_band: int) -> str:
     return f"md5({cols})"
 
 
-def simhash_bit(col: Column, k: int) -> Column:
-    """k-th hash bit of a token: parity of the ascii code of the k-th
-    hex char of its md5 — cheap, deterministic, identical in DuckDB."""
-    return F.ascii(F.substring(F.md5(col), k + 1, 1)) % 2
-
-
 def sql_simhash_bit(expr: str, k: int) -> str:
+    """k-th hash bit of a token: parity of the ascii code of the k-th
+    hex char of its md5, as a DuckDB SQL expression."""
     return f"(ascii(substr(md5({expr}), {k + 1}, 1)) % 2)"

@@ -122,37 +122,3 @@ def cosine_given_bnorm(a: Column, b: Column, bn2: Column) -> Column:
     dot_d = s.getField("d").cast("double") / F.lit(QV)
     na_d = s.getField("na").cast("double") / F.lit(QV)
     return dot_d / (F.sqrt(na_d) * F.sqrt(bn2))
-
-
-# --- SQL oracle emitters (DuckDB) --------------------------------------
-
-def sql_flat_cte(table: str = "embeddings", id_col: str = "vec_id") -> str:
-    """CTE flattening (id, i, x) with 1-based ordinality and the same
-    quantization as the Spark side (xq = nano-unit int of x)."""
-    return f"""
-    flat AS (
-      SELECT {id_col}, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-      FROM {table}
-    )"""
-
-
-def sql_pair_sums(left: str, right: str, join_cond: str) -> str:
-    """Pairwise quantized dot+norm sums from two flat relations."""
-    return f"""
-      SELECT {left}.vec_id AS vid_a, {right}.vec_id AS vid_b,
-             CAST(SUM(CAST(FLOOR({left}.x * {right}.x * {QV!r} + 0.5) AS BIGINT))
-                  AS DOUBLE) / {QV!r} AS dot
-      FROM {left} JOIN {right}
-        ON {left}.i = {right}.i AND ({join_cond})
-      GROUP BY 1, 2"""
-
-
-def sql_norm2_cte() -> str:
-    return f"""
-    norms AS (
-      SELECT vec_id,
-             CAST(SUM(CAST(FLOOR(x * x * {QV!r} + 0.5) AS BIGINT))
-                  AS DOUBLE) / {QV!r} AS n2
-      FROM flat GROUP BY vec_id
-    )"""

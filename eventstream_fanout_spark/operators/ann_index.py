@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.compaction import write_generation
 from .similarity import ivf_assign, ivf_centroids
 
 PQ_SUBS = 8     # subspaces
@@ -246,13 +247,12 @@ def build_pq_index(
     if corpus is None:
         corpus = emb.where(F.col("vec_id") != 0)
     corpus = corpus.select("vec_id", "embedding")
-    (
+    write_generation(
         encode_pq_codes(corpus, codebook, centroids)
-        .withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "list_id")
-        .parquet(f"{index_path}/codes")
+        .withColumn("batch_id", F.lit(FROZEN_BATCH_ID)),
+        f"{index_path}/codes",
+        "batch_id",
+        "list_id",
     )
 
 
@@ -763,7 +763,7 @@ def build_attr_store(
             ),
         ).cast("long"),
     ).otherwise(F.col("list_id"))
-    (
+    write_generation(
         joined.select(
             "vec_id",
             guarded_list.alias("list_id"),
@@ -773,11 +773,10 @@ def build_attr_store(
                 for c in attrs.columns
                 if c != "vec_id"
             ],
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "list_id")
-        .parquet(f"{index_path}/attrs")
+        ),
+        f"{index_path}/attrs",
+        "batch_id",
+        "list_id",
     )
 
 

@@ -54,7 +54,7 @@ from ..functions.hashing import shingles, sql_shingles, sql_tokens, tokens
 
 # Hashed-feature space for DSIR-style weighting: two md5 hex chars
 # fold every bigram into 64 buckets (deterministic and identical in
-# both engines — the simhash_bit trick widened to a bucket id).
+# both engines — the sql_simhash_bit trick widened to a bucket id).
 N_FEATURE_BUCKETS = 64
 
 # DSIR target slice for the registered demo: English documents (the

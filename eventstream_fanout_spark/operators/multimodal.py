@@ -10,8 +10,7 @@ CRC32 verification, inflate, 5-filter scanline reconstruction) — both
 hash-checked end-to-end by the ``wav_audio_decode`` /
 ``png_image_decode`` queries.  Codec-library formats (JPEG, video)
 remain a STUB: ``decode_documents`` produces deterministic fake
-features and ``_real_decode`` raises NotImplementedError behind an
-import gate.  Everything Spark-side — schema, binary column handling,
+features.  Everything Spark-side — schema, binary column handling,
 Arrow batch shape, partition-parallel execution — is real and tested
 for all paths.
 
@@ -47,22 +46,10 @@ def to_media_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", payload.alias("payload"), meta.alias("meta"))
 
 
-def _real_decode(payload: bytes):  # pragma: no cover - stub
-    """Real media decode would live here (PIL/librosa/av)."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "media decode requires an image library not present in this "
-            "container; Spark-side plumbing is exercised via the "
-            "deterministic fake below"
-        ) from exc
-
-
 def decode_documents(media: DataFrame) -> DataFrame:
     """Arrow-batched 'decode': mapInPandas over the binary payload.
-    Returns typed features; swap the fake for ``_real_decode`` when the
-    codec libraries exist.
+    Returns typed features; a real decoder (PIL/librosa/av) replaces
+    the fake when the codec libraries exist.
 
     The batch function is fully self-contained (no references to this
     module) so cloudpickle ships it by value — executors don't need the

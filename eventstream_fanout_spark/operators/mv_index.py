@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_given_bnorm
 from ..functions.vectors import norm2 as _norm2
+from ..streaming.compaction import write_generation
 from .ann_index import FROZEN_BATCH_ID
 from .multivector import (
     CHUNK_DIM,
@@ -95,14 +96,13 @@ def _write_generation(
     bucket inside — both pure functions of the rows, so a replayed
     batch rewrites byte-identically); dynamic overwrite keeps the
     replay touching exactly itself."""
-    (
+    write_generation(
         rows.withColumn("batch_id", F.lit(int(batch_id)))
         .repartition("bgrp")
-        .sortWithinPartitions("bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "bgrp")
-        .parquet(f"{index_path}/chunks")
+        .sortWithinPartitions("bucket"),
+        f"{index_path}/chunks",
+        "batch_id",
+        "bgrp",
     )
 
 

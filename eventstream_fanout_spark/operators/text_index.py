@@ -93,6 +93,7 @@ from pyspark.sql import functions as F
 
 from ..functions.core import dsum
 from ..functions.hashing import tokens
+from ..streaming.compaction import write_generation
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -152,12 +153,9 @@ def build_text_index(
     # Before, each of the four writes re-ran the explode→tf→dl tree
     # over the corpus.
     postings, _dl = doc_postings(docs)
-    (
-        postings.withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/postings")
+    write_generation(
+        postings.withColumn("batch_id", F.lit(FROZEN_BATCH_ID)),
+        f"{index_path}/postings",
     )
     # Schema-specified read-back (r15 — the SPARK-23271 corner the
     # vector-dedup sink fixed first): an all-empty-text corpus commits
@@ -183,12 +181,9 @@ def build_text_index(
     stats_obs = Observation()
     stats = batch_stats(dl).observe(stats_obs, F.sum("n_docs").alias("n"))
     for rel, name in ((dl, "doclens"), (vocab, "vocab"), (stats, "stats")):
-        (
-            rel.withColumn("batch_id", F.lit(FROZEN_BATCH_ID))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/{name}")
+        write_generation(
+            rel.withColumn("batch_id", F.lit(FROZEN_BATCH_ID)),
+            f"{index_path}/{name}",
         )
     # Bloom LAST, from the just-written artifacts instead of the live
     # tokenization subtree (ADVICE r11: the old bloom-first call
@@ -984,17 +979,14 @@ def build_text_attr_store(
             ),
         ).cast("long"),
     ).otherwise(F.col("doc_id"))
-    (
+    write_generation(
         joined.select(
             "tok",
             guarded_doc.alias("doc_id"),
             "batch_id",
             *[c for c in attrs.columns if c != "doc_id"],
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/attrs")
+        ),
+        f"{index_path}/attrs",
     )
 
 
@@ -1262,11 +1254,8 @@ def write_idbloom(
     pass over ``ids`` on the hot write path (ADVICE r11).  An
     over-estimate is safe (larger m → lower false-positive rate)."""
     n = int(n_docs) if n_docs is not None else ids.count()
-    (
+    write_generation(
         idbloom_rows(ids, idbloom_m(n))
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/idbloom")
+        .withColumn("batch_id", F.lit(int(batch_id))),
+        f"{index_path}/idbloom",
     )

@@ -93,12 +93,10 @@ def compact_parquet(
     """
     import math
 
-    from py4j.java_gateway import java_import
+    from ..streaming.compaction import hadoop_fs
 
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    fs = jvm.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    summary = fs.getContentSummary(jvm.Path(path))
+    fs, P = hadoop_fs(spark, path)
+    summary = fs.getContentSummary(P(path))
     n_files = max(1, math.ceil(summary.getLength() / (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)

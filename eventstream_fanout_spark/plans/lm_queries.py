@@ -1244,9 +1244,10 @@ def stream_lm_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..streaming import await_or_raise
+    from ..streaming.compaction import manifest_watermark
     from ..streaming.lm_store import (
-        _lm_watermark,
         lm_ingest_sink,
+        lm_manifest_path,
         lm_table_name,
         serve_bigram_counts,
         serve_vocab_sizes,
@@ -1289,7 +1290,9 @@ def stream_lm_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     vtot = serve_vocab_sizes(spark, f"{tmp}/store", 3).agg(
         F.sum("vocab_v").cast("bigint").alias("vocab_total")
     )
-    wm = _lm_watermark(spark, f"{tmp}/store", "bigrams")
+    wm = manifest_watermark(
+        spark, lm_manifest_path(f"{tmp}/store", "bigrams")
+    )
     parts = (
         spark.table(lm_table_name(f"{tmp}/store", "bigrams"))
         .select("batch_id")
@@ -1567,13 +1570,14 @@ def lm_kn_store_scoring_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.lm import kn_trigram_terms_from_counts
+    from ..streaming.compaction import manifest_watermark
     from ..streaming.lm_store import (
-        _lm_watermark,
         compact_lm_store,
         erase_lm_docs,
         erase_lm_trigram_docs,
         ingest_lm_batch,
         ingest_lm_trigram_batch,
+        lm_manifest_path,
         lm_table_name,
         serve_bigram_counts,
         serve_trigram_counts,
@@ -1602,7 +1606,7 @@ def lm_kn_store_scoring_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         serve_vocab_sizes(spark, root, 2),
     )
     scores, evagg = _kn3_scores_and_evagg(terms)
-    wm = _lm_watermark(spark, root, "trigrams")
+    wm = manifest_watermark(spark, lm_manifest_path(root, "trigrams"))
     parts = (
         spark.table(lm_table_name(root, "trigrams"))
         .select("batch_id")

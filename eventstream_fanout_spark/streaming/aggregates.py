@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import write_generation
+
 DEFAULT_WATERMARK = "10 minutes"
 
 
@@ -117,12 +119,7 @@ def rollup_sink(path: str, *keys: str, ts_col: str = "ts", width: str = "1 hour"
             )
             .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        write_generation(partial, path)
 
     return write
 

@@ -15,9 +15,9 @@ vectors immediately: the codes scan unions all generations.
 Steady-state hygiene mirrors the dedup store too: one partition per
 micro-batch accumulates listing overhead, so :func:`compact_index`
 folds committed batch partitions below the replay watermark into a new
-frozen generation with the same two-phase (write-then-delete) crash
-contract as corpus_dedup.compact_store.  One semantic difference from
-the dedup store: duplicate rows here are NOT harmless (a vec_id
+frozen generation with the shared two-phase (write-then-delete) crash
+contract of :func:`.compaction.compact_generations`.  One semantic
+difference from the dedup store: duplicate rows here are NOT harmless (a vec_id
 present in two generations doubles its summed ADC distance and sinks
 it in the ranking), so the fold dedupes on vec_id, and after a crash
 *between* the fold write and the source deletes, compaction must be
@@ -32,22 +32,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann_index import encode_pq_codes
+from .compaction import (
+    StagedSwap,
+    attrs_swap,
+    compact_generations,
+    delete_path,
+    erase_rows,
+    path_exists,
+    read_store_or_none,
+    write_generation,
+)
 
 
-def _read_artifact_or_raise(spark: SparkSession, path: str, what: str):
-    """The quantizer artifacts are REQUIRED: ingesting with a missing
-    codebook/centroids would silently drop every new vector's codes.
-    Fail closed instead (the corpus_dedup fail-closed stance)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        raise RuntimeError(
-            f"ANN ingest: the persisted {what} at {path} is missing or "
-            "unreadable — build the index (build_pq_index) before "
-            "streaming new vectors into it"
-        ) from exc
+def read_quantizer(
+    spark: SparkSession, index_path: str
+) -> tuple[DataFrame, DataFrame]:
+    """(codebook, centroids) of the index.  The quantizer artifacts
+    are REQUIRED: ingesting with a missing codebook/centroids would
+    silently drop every new vector's codes, so a missing one raises
+    (and an unreadable one propagates its read error — the shared
+    fail-closed read)."""
+    out = []
+    for name in ("codebook", "centroids"):
+        df = read_store_or_none(spark, f"{index_path}/{name}")
+        if df is None:
+            raise RuntimeError(
+                f"ANN ingest: the persisted quantizer {name} at "
+                f"{index_path}/{name} is missing — build the index "
+                "(build_pq_index) before streaming new vectors into it"
+            )
+        out.append(df)
+    return out[0], out[1]
 
 
 def _attr_data_cols(attrs_store: DataFrame) -> list[str]:
@@ -72,8 +87,6 @@ def _require_attr_cols(
     state no probe guard can see (ADC membership is statistics-free)
     and one the documented re-run heal cannot fix (the re-run fails
     at the same point forever)."""
-    from .compaction import read_store_or_none
-
     attrs_store = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs_store is None:
         return
@@ -112,17 +125,10 @@ def streaming_ann_index_sink(index_path: str):
     reports loudly, and replay overwrites both partitions."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        from .compaction import read_store_or_none
-
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        codebook = _read_artifact_or_raise(
-            spark, f"{index_path}/codebook", "PQ codebook"
-        )
-        centroids = _read_artifact_or_raise(
-            spark, f"{index_path}/centroids", "IVF centroids"
-        )
+        codebook, centroids = read_quantizer(spark, index_path)
         attrs_store = read_store_or_none(spark, f"{index_path}/attrs")
         acols: list[str] = []
         if attrs_store is not None:
@@ -137,15 +143,13 @@ def streaming_ann_index_sink(index_path: str):
                     "filtered probe; carry the attr columns on the "
                     "ingest stream (or drop the attrs store)"
                 )
-        (
+        write_generation(
             encode_pq_codes(
                 batch_df.select("vec_id", "embedding"), codebook, centroids
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(f"{index_path}/codes")
+            ).withColumn("batch_id", F.lit(int(batch_id))),
+            f"{index_path}/codes",
+            "batch_id",
+            "list_id",
         )
         if attrs_store is not None:
             # the just-written codes partition IS the batch's
@@ -156,15 +160,13 @@ def streaming_ann_index_sink(index_path: str):
                 .where(F.col("batch_id") == int(batch_id))
                 .select("vec_id", "list_id")
             )
-            (
+            write_generation(
                 assigned.join(
                     batch_df.select("vec_id", *acols), "vec_id"
-                )
-                .withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "list_id")
-                .parquet(f"{index_path}/attrs")
+                ).withColumn("batch_id", F.lit(int(batch_id))),
+                f"{index_path}/attrs",
+                "batch_id",
+                "list_id",
             )
 
     return process
@@ -190,8 +192,6 @@ def delete_vectors(
     erased vectors are dead weight the filtered probe's semi-join
     would silently carry, and right-to-erasure covers the metadata
     too)."""
-    from .compaction import erase_rows, read_store_or_none
-
     ids = [int(v) for v in vec_ids]
     n = erase_rows(
         spark,
@@ -227,11 +227,6 @@ def compact_index(
     two-phase contract (its generation ids are allocated from its own
     partitions — the two tables need not share fold ids, the filtered
     probe's coverage join is on ``vec_id``)."""
-    from .compaction import (
-        compact_generations,
-        read_store_or_none,
-    )
-
     n = compact_generations(
         spark,
         f"{index_path}/codes",
@@ -293,8 +288,6 @@ def upsert_vectors(
     marker is written first so the failure direction is conservative:
     a crash right after it refuses some reproducible probes, never
     serves an unreproducible one."""
-    from .compaction import erase_rows, read_store_or_none
-
     # attr-column presence is validated BEFORE any destructive phase
     # (ADVICE r11) — see _require_attr_cols
     _require_attr_cols(spark, index_path, new_vectors, "upsert_vectors")
@@ -302,15 +295,7 @@ def upsert_vectors(
         int(r["vec_id"])
         for r in new_vectors.select("vec_id").distinct().collect()
     ]
-    (
-        spark.createDataFrame(
-            [(len(ids), int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
-    )
+    _maint_marker(spark, index_path, len(ids), batch_id)
     rewritten = erase_rows(
         spark,
         f"{index_path}/codes",
@@ -411,49 +396,22 @@ def refit_index(
     the parked copy before refitting again; after the second rename
     the refit is complete and the preamble merely deletes the parked
     copy."""
-    from py4j.java_gateway import java_import
-
     from ..operators.ann_index import (
         build_attr_store,
         build_pq_index,
         pq_codebook,
     )
     from ..operators.similarity import ivf_fit_centroids
-    from .compaction import read_store_or_none
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    conf = spark._jsc.hadoopConfiguration()
-    live_p = jvm.Path(index_path)
-    stage = f"{index_path}.refit_stage"
-    parked = f"{index_path}.pre_refit"
-    stage_p, parked_p = jvm.Path(stage), jvm.Path(parked)
-    fs = live_p.getFileSystem(conf)
-
-    # Hadoop FileSystem.rename reports failure by returning false,
-    # not raising — an unchecked false would leave the swap half-done
-    # while this function reports success (ADVICE r11): probes would
-    # silently keep serving the stale quantizer, or worse the parked
-    # old index would be deleted below with the new one never moved
-    # in.  Check every return and fail loudly.
-    def _rename(src_p, dst_p, why: str) -> None:
-        if not fs.rename(src_p, dst_p):
-            raise RuntimeError(
-                f"refit_index: rename {src_p} -> {dst_p} failed "
-                f"({why}); index left as-is — re-run the same call "
-                f"to recover"
-            )
 
     # recovery preamble (see crash contract above)
-    if fs.exists(parked_p):
-        if not fs.exists(live_p):
-            # crashed between the renames: restore, then refit fresh
-            _rename(parked_p, live_p, "restore parked live index")
-        else:
-            # crashed after the swap, before cleanup
-            fs.delete(parked_p, True)
-    if fs.exists(stage_p):  # stale stage from any crashed attempt
-        fs.delete(stage_p, True)
+    swap = StagedSwap(
+        spark,
+        index_path,
+        f"{index_path}.refit_stage",
+        f"{index_path}.pre_refit",
+        "refit_index",
+    )
+    stage = swap.stage_path
 
     if corpus is None:
         corpus = emb.where(F.col("vec_id") != 0)
@@ -490,17 +448,7 @@ def refit_index(
         .partitionBy("batch_id")
         .parquet(f"{stage}/upserts")
     )
-    # the swap: old index parked, staged index in, park deleted —
-    # the park is only deleted after verifying the staged index
-    # actually landed at the live path
-    _rename(live_p, parked_p, "park old index")
-    _rename(stage_p, live_p, "install staged index")
-    if not fs.exists(live_p):
-        raise RuntimeError(
-            f"refit_index: staged index did not land at {index_path} "
-            f"after rename; parked copy kept at {parked}"
-        )
-    fs.delete(parked_p, True)
+    swap.commit()
 
 
 def add_attr_column(
@@ -551,16 +499,10 @@ def add_attr_column(
 
     Single-writer maintenance-window contract, like every
     store-rewriting op."""
-    from .compaction import read_store_or_none
-
     # recovery preamble FIRST (the refit_index crash contract), via
-    # the shared evolve-swap context — add and drop use the same
-    # stage/park suffixes so either heals the other's crash
-    jvm, fs, _rename = _attrs_swap_ctx(
-        spark, index_path, "add_attr_column"
-    )
-    stage = f"{index_path}/attrs.evolve_stage"
-    stage_p = jvm.Path(stage)
+    # the shared evolve swap — add and drop use the same stage/park
+    # names so either heals the other's crash
+    swap = attrs_swap(spark, index_path, "add_attr_column")
 
     attrs = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs is None:
@@ -583,18 +525,8 @@ def add_attr_column(
         )
 
     # marker FIRST (see docstring); n_ids=-2 tags the evolve
-    # generation (refit uses -1, upserts the non-negative id count) —
-    # the as-of guard keys on max(batch_id) only, so the tag is
-    # diagnostic
-    (
-        spark.createDataFrame(
-            [(-2, int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
-    )
+    # generation (refit uses -1, upserts the non-negative id count)
+    _maint_marker(spark, index_path, -2, batch_id)
 
     tagged = values.withColumn("_present", F.lit(1))
     joined = attrs.join(tagged, "vec_id", "left")
@@ -627,93 +559,50 @@ def add_attr_column(
             )
             .write.mode("overwrite")
             .partitionBy("batch_id", "list_id")
-            .parquet(stage)
+            .parquet(swap.stage_path)
         )
     except Exception:
         # a refused stage (coverage assert, executor loss) must not
-        # linger: the live store is untouched and still servable, so
-        # drop the partial sibling instead of leaving it for the next
-        # run's preamble
-        if fs.exists(stage_p):
-            fs.delete(stage_p, True)
+        # linger: drop the partial sibling instead of leaving it for
+        # the next run's preamble
+        swap.drop_stage()
         raise
-    _attrs_swap_commit(spark, jvm, fs, _rename, index_path,
-                       "add_attr_column")
+    swap.commit()
 
 
-def _list_maint_ctx(spark: SparkSession, index_path: str, op: str):
-    """Shared filesystem context for the list-maintenance ops
-    (split_list / merge_lists): (jvm, fs, checked-rename closure),
-    plus the centroid-swap recovery preamble.  BOTH ops use the same
-    stage/park suffixes (``centroids.maint_stage`` /
-    ``centroids.pre_maint``), so either op's preamble heals a crash
-    left by the other — one crash contract for the whole maintenance
-    family."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.Path(index_path).getFileSystem(conf)
-
-    def _rename(src_p, dst_p, why: str) -> None:
-        if not fs.rename(src_p, dst_p):
-            raise RuntimeError(
-                f"{op}: rename {src_p} -> {dst_p} failed ({why}); "
-                "re-run the same call to recover"
-            )
-
-    live_p = jvm.Path(f"{index_path}/centroids")
-    stage_p = jvm.Path(f"{index_path}/centroids.maint_stage")
-    park_p = jvm.Path(f"{index_path}/centroids.pre_maint")
-    # recovery preamble: a crash between the centroid-swap renames
-    # leaves the live centroids missing and the old table parked
-    if fs.exists(park_p):
-        if not fs.exists(live_p):
-            _rename(park_p, live_p, "restore parked centroids")
-        else:
-            fs.delete(park_p, True)
-    if fs.exists(stage_p):
-        fs.delete(stage_p, True)
-    return jvm, fs, _rename
+def _centroids_swap(spark: SparkSession, index_path: str, op: str):
+    """The centroid-table swap of the list-maintenance ops (split_list
+    / merge_lists), with its recovery preamble run on construction.
+    BOTH ops use the same stage/park names, so either op's preamble
+    heals a crash left by the other — one crash contract for the whole
+    maintenance family."""
+    return StagedSwap(
+        spark,
+        f"{index_path}/centroids",
+        f"{index_path}/centroids.maint_stage",
+        f"{index_path}/centroids.pre_maint",
+        op,
+    )
 
 
-def _commit_centroids(
-    spark: SparkSession,
-    jvm,
-    fs,
-    rename,
-    index_path: str,
-    new_centroids: DataFrame,
-    op: str,
-) -> None:
+def _commit_centroids(swap: StagedSwap, new_centroids: DataFrame) -> None:
     """THE commit point of a list-maintenance op: stage the
     replacement centroids table and swap it in by checked atomic
     renames — every probe shape flips from the old list topology to
     the new one in one metadata move (the LIST MANIFEST invariant)."""
-    live = f"{index_path}/centroids"
-    stage = f"{index_path}/centroids.maint_stage"
-    park = f"{index_path}/centroids.pre_maint"
-    new_centroids.write.mode("overwrite").parquet(stage)
-    rename(jvm.Path(live), jvm.Path(park), "park old centroids")
-    rename(jvm.Path(stage), jvm.Path(live), "install new centroids")
-    if not fs.exists(jvm.Path(live)):
-        raise RuntimeError(
-            f"{op}: new centroids did not land at {live}; parked copy "
-            f"kept at {park}"
-        )
-    fs.delete(jvm.Path(park), True)
+    new_centroids.write.mode("overwrite").parquet(swap.stage_path)
+    swap.commit()
 
 
 def _cleanup_list_partitions(
-    spark: SparkSession, jvm, fs, index_path: str, list_ids: list[int]
+    spark: SparkSession, index_path: str, list_ids: list[int]
 ) -> None:
     """Delete the (generation, list) directories of now-unreferenced
     lists from codes and attrs — post-commit garbage collection; a
     crash before this leaves manifest-invisible garbage only."""
     for table in ("codes", "attrs"):
         tpath = f"{index_path}/{table}"
-        if not fs.exists(jvm.Path(tpath)):
+        if not path_exists(spark, tpath):
             continue
         gens = [
             (r["batch_id"], r["list_id"])
@@ -724,9 +613,7 @@ def _cleanup_list_partitions(
             .collect()
         ]
         for g, li in gens:
-            fs.delete(
-                jvm.Path(f"{tpath}/batch_id={g}/list_id={li}"), True
-            )
+            delete_path(spark, f"{tpath}/batch_id={g}/list_id={li}")
 
 
 def _maint_marker(
@@ -735,14 +622,11 @@ def _maint_marker(
     """The as-of refusal marker, written FIRST by every history-
     rewriting maintenance op (upsert -3=split, -4=merge; the guard
     keys on max(batch_id), the tag is diagnostic)."""
-    (
+    write_generation(
         spark.createDataFrame(
             [(int(tag), int(batch_id))], "n_ids int, batch_id int"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/upserts")
+        ),
+        f"{index_path}/upserts",
     )
 
 
@@ -787,34 +671,29 @@ def _rewrite_members(
     codes copy over unchanged (list-independent), generations
     preserved, dynamic overwrite so replay converges; the attrs side
     store (when present) rides the same reassignment."""
-    (
-        members.join(assign, "vec_id")
-        .select(
+    write_generation(
+        members.join(assign, "vec_id").select(
             "vec_id",
             F.col("_new_list").alias("list_id"),
             "codes",
             "batch_id",
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "list_id")
-        .parquet(f"{index_path}/codes")
+        ),
+        f"{index_path}/codes",
+        "batch_id",
+        "list_id",
     )
-    from .compaction import read_store_or_none
-
     attrs = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs is not None:
-        (
+        write_generation(
             attrs.where(
                 F.col("list_id").isin([int(x) for x in old_list_ids])
             )
             .drop("list_id")
             .join(assign.select("vec_id", "_new_list"), "vec_id")
-            .withColumnRenamed("_new_list", "list_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(f"{index_path}/attrs")
+            .withColumnRenamed("_new_list", "list_id"),
+            f"{index_path}/attrs",
+            "batch_id",
+            "list_id",
         )
 
 
@@ -874,12 +753,12 @@ def split_list(
     from ..functions.vectors import cosine
     from ..operators.similarity import ivf_assign, ivf_fit_centroids
 
-    jvm, fs, rename = _list_maint_ctx(spark, index_path, "split_list")
+    swap = _centroids_swap(spark, index_path, "split_list")
     centroids = spark.read.parquet(f"{index_path}/centroids")
     cids = [int(r["cid"]) for r in centroids.select("cid").collect()]
     if int(list_id) not in cids:
         # replay after the commit point: finish the cleanup phase
-        _cleanup_list_partitions(spark, jvm, fs, index_path, [list_id])
+        _cleanup_list_partitions(spark, index_path, [list_id])
         return None
 
     members, mvecs, n_members = _list_members(
@@ -923,14 +802,13 @@ def split_list(
     _rewrite_members(spark, index_path, members, assign, [list_id])
     # 3. THE commit: swap the centroids table (old cid out, new in)
     _commit_centroids(
-        spark, jvm, fs, rename, index_path,
+        swap,
         centroids.where(F.col("cid") != int(list_id)).unionByName(
             fitted.select("cid", "ce")
         ),
-        "split_list",
     )
     # 4. cleanup the now-unreferenced old-list partitions
-    _cleanup_list_partitions(spark, jvm, fs, index_path, [list_id])
+    _cleanup_list_partitions(spark, index_path, [list_id])
     return c1, c2
 
 
@@ -972,13 +850,13 @@ def merge_lists(
             f"merge_lists: got {ids} — merging needs at least two "
             "distinct lists"
         )
-    jvm, fs, rename = _list_maint_ctx(spark, index_path, "merge_lists")
+    swap = _centroids_swap(spark, index_path, "merge_lists")
     centroids = spark.read.parquet(f"{index_path}/centroids")
     cids = {int(r["cid"]) for r in centroids.select("cid").collect()}
     present = [i for i in ids if i in cids]
     if not present:
         # replay after the commit point: finish the cleanup phase
-        _cleanup_list_partitions(spark, jvm, fs, index_path, ids)
+        _cleanup_list_partitions(spark, index_path, ids)
         return None
     if len(present) < len(ids):
         raise RuntimeError(
@@ -1010,13 +888,12 @@ def merge_lists(
     )
     _rewrite_members(spark, index_path, members, assign, ids)
     _commit_centroids(
-        spark, jvm, fs, rename, index_path,
+        swap,
         centroids.where(~F.col("cid").isin(ids)).unionByName(
             merged.select("cid", "ce")
         ),
-        "merge_lists",
     )
-    _cleanup_list_partitions(spark, jvm, fs, index_path, ids)
+    _cleanup_list_partitions(spark, index_path, ids)
     return new_cid
 
 
@@ -1041,11 +918,7 @@ def drop_attr_column(
 
     ``batch_id`` names the maintenance batch for logging symmetry
     with the other ops; single-writer maintenance-window contract."""
-    jvm, fs, rename = _attrs_swap_ctx(
-        spark, index_path, "drop_attr_column"
-    )
-    from .compaction import read_store_or_none
-
+    swap = attrs_swap(spark, index_path, "drop_attr_column")
     attrs = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs is None:
         raise RuntimeError(
@@ -1077,63 +950,11 @@ def drop_attr_column(
             f"{index_path}/attrs directory instead to retire "
             "filterability entirely"
         )
-    stage = f"{index_path}/attrs.evolve_stage"
     (
         attrs.select("vec_id", "list_id", "batch_id", *remaining)
         .write.mode("overwrite")
         .partitionBy("batch_id", "list_id")
-        .parquet(stage)
+        .parquet(swap.stage_path)
     )
-    _attrs_swap_commit(spark, jvm, fs, rename, index_path,
-                       "drop_attr_column")
+    swap.commit()
     return True
-
-
-def _attrs_swap_ctx(spark: SparkSession, index_path: str, op: str):
-    """(jvm, fs, checked-rename) + the attrs-swap recovery preamble —
-    shared by add_attr_column and drop_attr_column (same
-    ``attrs.evolve_stage`` / ``attrs.pre_evolve`` suffixes, so either
-    op's preamble heals a crash left by the other)."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.Path(index_path).getFileSystem(conf)
-
-    def _rename(src_p, dst_p, why: str) -> None:
-        if not fs.rename(src_p, dst_p):
-            raise RuntimeError(
-                f"{op}: rename {src_p} -> {dst_p} failed ({why}); "
-                "re-run the same call to recover"
-            )
-
-    live_p = jvm.Path(f"{index_path}/attrs")
-    stage_p = jvm.Path(f"{index_path}/attrs.evolve_stage")
-    park_p = jvm.Path(f"{index_path}/attrs.pre_evolve")
-    if fs.exists(park_p):
-        if not fs.exists(live_p):
-            _rename(park_p, live_p, "restore parked attrs store")
-        else:
-            fs.delete(park_p, True)
-    if fs.exists(stage_p):
-        fs.delete(stage_p, True)
-    return jvm, fs, _rename
-
-
-def _attrs_swap_commit(
-    spark: SparkSession, jvm, fs, rename, index_path: str, op: str
-) -> None:
-    """Install a staged attrs store by checked atomic renames (the
-    shared evolve commit)."""
-    live = f"{index_path}/attrs"
-    stage = f"{index_path}/attrs.evolve_stage"
-    park = f"{index_path}/attrs.pre_evolve"
-    rename(jvm.Path(live), jvm.Path(park), "park old attrs store")
-    rename(jvm.Path(stage), jvm.Path(live), "install new attrs store")
-    if not fs.exists(jvm.Path(live)):
-        raise RuntimeError(
-            f"{op}: new attrs store did not land at {live}; parked "
-            f"copy kept at {park}"
-        )
-    fs.delete(jvm.Path(park), True)

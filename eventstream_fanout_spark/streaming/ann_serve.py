@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ann_index import pq_batch_probe_topk
+from .compaction import write_generation
 
 SERVE_NPROBE = 2  # default coarse lists probed per query
 
@@ -53,12 +54,9 @@ def streaming_ann_probe_sink(
             k,
             nprobe=nprobe,
         )
-        (
-            topk.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        write_generation(
+            topk.withColumn("batch_id", F.lit(int(batch_id))),
+            out_path,
         )
 
     return process

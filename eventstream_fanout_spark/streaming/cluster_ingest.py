@@ -35,6 +35,7 @@ from ..operators.clustering import (
     kmeans_fit_q,
     quantize_vectors,
 )
+from .compaction import write_generation
 
 
 def build_cluster_fit_store(
@@ -77,7 +78,7 @@ def cluster_sums_sink(path: str):
         spark = batch_df.sparkSession
         cents = _frozen_centroids(spark, path)
         asg = assign_clusters(quantize_vectors(batch_df), cents)
-        (
+        write_generation(
             centroid_sums(asg)
             .select(
                 F.lit(int(batch_id)).cast("int").alias("batch_id"),
@@ -85,11 +86,8 @@ def cluster_sums_sink(path: str):
                 "i",
                 "s",
                 "n",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{path}/sums")
+            ),
+            f"{path}/sums",
         )
 
     return sink

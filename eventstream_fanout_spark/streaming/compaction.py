@@ -1,17 +1,31 @@
-"""Generic two-phase compaction for batch_id-partitioned parquet
-stores — the shared mechanics behind corpus_dedup.compact_store,
-ann_ingest.compact_index and text_ingest.compact_text_index.
+"""The batch-id generational store layout — the one module that decides
+how every store in this package is written, read, counted, compacted,
+erased and swapped.  Every other module goes through the helpers
+below: none sets ``partitionOverwriteMode`` or opens a Hadoop
+``FileSystem`` itself (pinned by a tier-1 test).
 
 Contract (identical across stores):
 
-* Streaming sinks append under ``batch_id=N`` partitions; a replayed
+* Streaming sinks write under ``batch_id=N`` partitions through
+  :func:`write_generation` (dynamic partition overwrite); a replayed
   batch overwrites only its own partition, so normal operation never
-  duplicates a row across generations.
+  duplicates a row across generations — the reference's
+  "effectively-once" posture, keyed by batch id.
+* Census invariant: a partition is a generation iff its directory
+  holds at least one data file (:func:`partition_batch_ids_path`).
+  This equals "the generation holds rows" because dynamic overwrite
+  and ``partitionBy`` create a data file only for a partition with
+  rows, and each store has a SINGLE writer at a time (the sink's
+  serial triggers or one maintenance op), so no reader observes a
+  partition between its directory and its first file.  A zero-row
+  generation therefore does not exist for the census; stores that
+  must witness an empty generation write it with
+  :func:`write_partition_dir` or a manifest row instead.
 * :func:`compact_generations` folds every partition below the replay
   watermark — plus previous frozen generations (negative ids) — into a
   NEW frozen generation ``batch_id = -(g+1)``, written durably BEFORE
   the source partitions are deleted.  A crash in between leaves both
-  generations present; whether that is harmless (dedup bands: can only
+  generations present; whether that is harmless (can only
   over-reject) or must be folded away before reads resume (ANN codes:
   duplicates double ADC sums) is the CALLER's semantic — pass
   ``dedup_cols`` to make the fold collapse duplicates so a re-run
@@ -27,8 +41,109 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# hash buckets of every bucketed generational table (graph postings,
+# LM counts)
+TABLE_BUCKETS = 16
 
-def read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)``: the Hadoop filesystem that owns ``path``
+    and the JVM ``Path`` constructor — the one handle every store
+    operation on directories (exists, list, delete, rename) goes
+    through."""
+    from py4j.java_gateway import java_import
+
+    jvm = spark._jvm
+    java_import(jvm, "org.apache.hadoop.fs.Path")
+    fs = jvm.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, jvm.Path
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """One namenode RPC; no Spark job."""
+    fs, P = hadoop_fs(spark, path)
+    return bool(fs.exists(P(path)))
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursive delete; a missing path is a no-op."""
+    fs, P = hadoop_fs(spark, path)
+    fs.delete(P(path), True)
+
+
+def write_generation(df: DataFrame, path: str, *partition_cols: str) -> None:
+    """Write ``df`` into the store at ``path``, replacing exactly the
+    partitions its rows fall in (dynamic partition overwrite) and
+    leaving every other partition untouched.  ``partition_cols``
+    defaults to ``batch_id``; nested layouts name theirs after it
+    (e.g. ``"batch_id", "list_id"``)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*(partition_cols or ("batch_id",)))
+        .parquet(path)
+    )
+
+
+def write_partition_dir(
+    df: DataFrame, path: str, value: int, key: str = "batch_id"
+) -> None:
+    """Overwrite exactly one ``key=<value>`` partition directory.
+
+    Written as a STATIC overwrite of the subdir (same idempotence as
+    :func:`write_generation`) because an EMPTY relation still commits
+    a schema-bearing zero-row file (SPARK-23271): a legitimately empty
+    generation — a delta with no new pairs, a rebuild that empties the
+    edge set — never leaves the store unreadable
+    (UNABLE_TO_INFER_SCHEMA on the next partition-discovery read)."""
+    df.write.mode("overwrite").parquet(f"{path}/{key}={value}")
+
+
+def _insert_generation(df: DataFrame, table: str) -> None:
+    """``insertInto`` a batch_id-partitioned TABLE, replacing only the
+    partitions ``df`` names.  ``insertInto`` ignores the per-write
+    ``partitionOverwriteMode`` option (the analyzer's self-overwrite
+    check must see DYNAMIC mode to replace one partition of a table
+    the same plan reads), so the SESSION conf is flipped around the
+    insert and restored in a finally.  A concurrent overwrite-mode
+    write in the same SparkSession during that window inherits
+    dynamic semantics — run store writes in their own session if
+    other partitioned overwrites race them (``foreachBatch`` never
+    races itself within a query).  ``insertInto`` binds by position:
+    ``df`` lists the data columns first and ``batch_id`` last."""
+    spark = df.sparkSession
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf_key, "static")
+    spark.conf.set(conf_key, "dynamic")
+    try:
+        df.write.mode("overwrite").insertInto(table)
+    finally:
+        spark.conf.set(conf_key, prev)
+
+
+def write_table_generation(df: DataFrame, table: str, bucket_col: str) -> None:
+    """Land one generation in a bucketed, batch_id-partitioned TABLE:
+    the first write creates it (partitioned by ``batch_id``, bucketed
+    and sorted on ``bucket_col`` so every read keyed on it scans its
+    buckets in place with no Exchange), later writes insert under
+    dynamic partition overwrite (:func:`_insert_generation`), so a
+    replayed batch id replaces exactly its own partition."""
+    if df.sparkSession.catalog.tableExists(table):
+        _insert_generation(df, table)
+        return
+    (
+        df.write.mode("overwrite")
+        .partitionBy("batch_id")
+        .bucketBy(TABLE_BUCKETS, bucket_col)
+        .sortBy(bucket_col)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+
+
+def read_store_or_none(
+    spark: SparkSession, path: str, exclude_batch_id: int | None = None
+) -> DataFrame | None:
     """Read a store artifact, returning None ONLY on the missing-path
     case (store not created yet).  Any other analysis failure — schema
     inference, corrupt metadata, a half-written marker — must PROPAGATE
@@ -37,6 +152,11 @@ def read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     artifact.  One shared classification so the generational stores
     cannot drift apart on what "missing" means.
 
+    ``exclude_batch_id`` masks the in-flight batch's OWN partition
+    (crash-replay safety: a replayed batch must not see — and reject
+    itself against — the rows its previous attempt already wrote);
+    partition pruning makes the mask metadata-only.
+
     The missing-path case is decided by a Hadoop ``FileSystem.exists``
     call instead of catching PATH_NOT_FOUND (VERDICT r11 item 2): the
     exception path made the JVM log a full stack trace for ordinary
@@ -44,15 +164,12 @@ def read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     stdout; the exists() probe is one namenode RPC and keeps the
     fail-closed contract — a path that exists but cannot be read
     still raises through ``spark.read``."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    p = jvm.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    if not path_exists(spark, path):
         return None
-    return spark.read.parquet(path)
+    df = spark.read.parquet(path)
+    if exclude_batch_id is not None and "batch_id" in df.columns:
+        df = df.where(F.col("batch_id") != int(exclude_batch_id))
+    return df
 
 
 def partition_batch_ids_path(spark: SparkSession, path: str) -> list[int]:
@@ -63,17 +180,11 @@ def partition_batch_ids_path(spark: SparkSession, path: str) -> list[int]:
     A partition counts iff its directory holds at least one
     non-hidden file — the same leaf-file rule Spark's partition
     discovery applies, so a crash-leftover empty directory is not
-    mistaken for a generation (dynamic overwrite and partitionBy
-    writes only ever create a data file for a partition with rows,
-    so file-bearing ⇔ row-bearing for these stores)."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    p = jvm.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    mistaken for a generation (see the census invariant in the
+    module docstring)."""
+    fs, P = hadoop_fs(spark, path)
     out = []
-    for st in fs.listStatus(p):
+    for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith("batch_id=")):
             continue
@@ -128,22 +239,15 @@ def compact_generations(
     folded = df.where(F.col("batch_id").isin(fold_ids)).select(*data_cols)
     if dedup_cols:
         folded = folded.dropDuplicates(dedup_cols)
-    part_cols = ["batch_id", *(extra_partition_cols or [])]
-    (
-        folded.withColumn("batch_id", F.lit(int(next_gen)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(path)
+    write_generation(
+        folded.withColumn("batch_id", F.lit(int(next_gen))),
+        path,
+        "batch_id",
+        *(extra_partition_cols or []),
     )
     # sources go away only now — the new generation is durably in place
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    fs = jvm.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     for bid in fold_ids:
-        fs.delete(jvm.Path(f"{path}/batch_id={bid}"), True)
+        delete_path(spark, f"{path}/batch_id={bid}")
     return len(fold_ids)
 
 
@@ -179,8 +283,6 @@ def erase_rows(
     missing partition is a no-op delete.  The kept-partition census
     rides the survivors write itself as an ``Observation`` — one
     Spark job total instead of three when ``touched`` is given."""
-    from py4j.java_gateway import java_import
-
     from pyspark.sql import Observation
 
     part_cols = ["batch_id", *(extra_partition_cols or [])]
@@ -212,37 +314,99 @@ def erase_rows(
     # overwrite leaves them untouched); an Observation is computed
     # DURING the write action, so no separate collect job runs
     obs = Observation()
-    (
+    write_generation(
         survivors.observe(
             obs,
             F.collect_set(
                 F.struct(*[F.col(c) for c in part_cols])
             ).alias("kept"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(path)
+        ),
+        path,
+        *part_cols,
     )
     keep = {tuple(r) for r in obs.get["kept"]}
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    fs = jvm.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     for vals in touched:
         if vals not in keep:  # partition emptied entirely
             sub = "/".join(
                 f"{c}={v}" for c, v in zip(part_cols, vals)
             )
-            fs.delete(jvm.Path(f"{path}/{sub}"), True)
+            delete_path(spark, f"{path}/{sub}")
     return len(touched)
+
+
+class StagedSwap:
+    """Replace the directory ``live`` by a fully written ``stage``
+    sibling through two checked renames (live -> ``park``, stage ->
+    live), so readers see the old directory or the new one, never a
+    mixture.  Constructing it runs the recovery preamble: a crash
+    between the renames (live missing, park present) is healed by
+    restoring the park; a crash after them leaves a park to delete;
+    a stale stage from any crashed attempt is dropped.  Ops that share
+    the same stage/park names heal each other's crashes.
+
+    Hadoop ``FileSystem.rename`` reports failure by returning false,
+    not raising — an unchecked false would leave the swap half-done
+    while the op reports success (ADVICE r11), so every rename is
+    checked and a failure raises."""
+
+    def __init__(
+        self, spark: SparkSession, live: str, stage: str, park: str, op: str
+    ):
+        self.fs, P = hadoop_fs(spark, live)
+        self.live, self.stage, self.park = P(live), P(stage), P(park)
+        self.stage_path, self.op = stage, op
+        if self.fs.exists(self.park):
+            if not self.fs.exists(self.live):
+                self._rename(self.park, self.live, "restore parked copy")
+            else:
+                self.fs.delete(self.park, True)
+        self.drop_stage()
+
+    def _rename(self, src, dst, why: str) -> None:
+        if not self.fs.rename(src, dst):
+            raise RuntimeError(
+                f"{self.op}: rename {src} -> {dst} failed ({why}); "
+                "re-run the same call to recover"
+            )
+
+    def drop_stage(self) -> None:
+        """Discard a partial stage (a refused or crashed stage write):
+        the live directory is untouched and still servable."""
+        if self.fs.exists(self.stage):
+            self.fs.delete(self.stage, True)
+
+    def commit(self) -> None:
+        """Swap the written stage in; the park is deleted only after
+        the stage is verified to have landed at the live path."""
+        self._rename(self.live, self.park, "park live copy")
+        self._rename(self.stage, self.live, "install staged copy")
+        if not self.fs.exists(self.live):
+            raise RuntimeError(
+                f"{self.op}: staged copy did not land at {self.live}; "
+                f"parked copy kept at {self.park}"
+            )
+        self.fs.delete(self.park, True)
+
+
+def attrs_swap(spark: SparkSession, index_path: str, op: str) -> StagedSwap:
+    """The swap that installs a rewritten ``attrs`` side store (attr
+    schema evolution on the text and ANN indexes alike): every such op
+    stages under ``attrs.evolve_stage`` and parks under
+    ``attrs.pre_evolve``, so any of them heals another's crash."""
+    return StagedSwap(
+        spark,
+        f"{index_path}/attrs",
+        f"{index_path}/attrs.evolve_stage",
+        f"{index_path}/attrs.pre_evolve",
+        op,
+    )
 
 
 # --- manifest-committed table compaction (r14: graph postings + LM
 # count stores) -------------------------------------------------------
 #
-# corpus_dedup.compact_store_table's crash window (insert done, drops
-# not) leaves DUPLICATE rows, which is safe there only because dup
-# bands can merely over-reject.  Count stores (LM) would double their
+# A plain two-phase fold's crash window (fold written, sources not yet
+# dropped) leaves DUPLICATE rows.  Count stores (LM) would double their
 # sums, and the graph postings contract wants exactness too — so these
 # stores commit each compaction through a MANIFEST row instead:
 #
@@ -279,6 +443,28 @@ def read_compact_manifest(
     return int(best["upto"]), int(best["gen"])
 
 
+def manifest_watermark(spark: SparkSession, manifest_path: str) -> int:
+    """The committed compaction watermark (0 if never compacted):
+    batches below it were folded away and can no longer be replayed."""
+    return read_compact_manifest(spark, manifest_path)[0]
+
+
+def live_batch_ids(
+    spark: SparkSession, table: str, manifest_path: str
+) -> list[int]:
+    """The non-frozen partitions of a manifest-compacted TABLE that
+    currently serve: batch ids at or above the compaction watermark
+    (empty before the table exists).  Partition-metadata-sized."""
+    wm = manifest_watermark(spark, manifest_path)
+    if not spark.catalog.tableExists(table):
+        return []
+    return [
+        b
+        for b in partition_batch_ids_table(spark, table)  # metadata, no job
+        if b >= wm
+    ]
+
+
 def visible_partitions(
     df: DataFrame, watermark: int, frozen_gen: int | None
 ) -> DataFrame:
@@ -306,8 +492,8 @@ def compact_table_manifest(
     frozen generation's rows — identity for postings (consumers
     distinct anyway), a count re-aggregation for the LM store.
     Returns the number of live source partitions folded.  Run with the
-    owning stream stopped; shares streaming_dedup_sink_bucketed's
-    session-scoped partitionOverwriteMode caveat."""
+    owning stream stopped; the insert shares
+    :func:`_insert_generation`'s session-conf caveat."""
     if spark.conf.get(
         "spark.sql.files.ignoreMissingFiles", "false"
     ) == "true":
@@ -333,22 +519,16 @@ def compact_table_manifest(
     folded = fold(
         df.where(F.col("batch_id").isin(fold_ids)).select(*data_cols)
     ).withColumn("batch_id", F.lit(int(next_gen)).cast("bigint"))
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        folded.select(*data_cols, "batch_id").write.mode(
-            "overwrite"
-        ).insertInto(table)
-    finally:
-        spark.conf.set(conf_key, prev)
+    _insert_generation(folded.select(*data_cols, "batch_id"), table)
     # THE commit point: the manifest row makes frozen(next_gen) the
     # serving base and masks everything below upto_batch_id
-    (
-        spark.range(1)
-        .select(F.lit(int(upto_batch_id)).cast("bigint").alias("upto"))
-        .write.mode("overwrite")
-        .parquet(f"{manifest_path}/gen={int(next_gen)}")
+    write_partition_dir(
+        spark.range(1).select(
+            F.lit(int(upto_batch_id)).cast("bigint").alias("upto")
+        ),
+        manifest_path,
+        next_gen,
+        key="gen",
     )
     # Superseded sources go away only now (masked either way).  The
     # sweep covers every live id below the new watermark — not just

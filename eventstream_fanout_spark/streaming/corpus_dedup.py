@@ -33,42 +33,16 @@ lives on the driver and never in executor memory — it IS the store.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    _salted_bucket_pairs,
-    banded_signatures,
-    minhash_signatures,
-)
+from ..operators.dedup import banded_signatures, minhash_signatures
+from .compaction import erase_rows, read_store_or_none, write_generation
 
 
 def batch_bands(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, band, bh) for a micro-batch of documents."""
     return banded_signatures(minhash_signatures(docs, text_col))
-
-
-def _read_store_or_none(
-    spark: SparkSession, path: str, exclude_batch_id: int | None
-) -> DataFrame | None:
-    """Read a per-batch-partitioned store artifact, masking the
-    in-flight batch's OWN partition (crash-replay safety), returning
-    None ONLY on the missing-path case.
-
-    Any other analysis failure (schema inference, corrupt metadata)
-    must propagate, or the caller would silently dedup against nothing
-    and admit duplicates forever — one shared classification so the
-    band store and the accepted-docs artifact cannot drift apart."""
-    from .compaction import read_store_or_none
-
-    df = read_store_or_none(spark, path)
-    if df is None:
-        return None
-    if exclude_batch_id is not None and "batch_id" in df.columns:
-        df = df.where(F.col("batch_id") != int(exclude_batch_id))
-    return df
 
 
 def accepted_bands(
@@ -81,7 +55,7 @@ def accepted_bands(
     bands, and without the mask its docs would reject themselves —
     the incremental-dedup replay bug (partition pruning makes the
     mask a metadata-only filter)."""
-    df = _read_store_or_none(spark, store_path, exclude_batch_id)
+    df = read_store_or_none(spark, store_path, exclude_batch_id)
     if df is None:  # store not created yet (PATH_NOT_FOUND)
         return spark.createDataFrame(
             [], "doc_id long, band int, bh string"
@@ -101,12 +75,6 @@ def dedup_batch_against_store(
     never all-pairs.  Within-batch survivors keep the LOWEST doc_id of
     each near-dup group (deterministic canonical), matching the batch
     family's canonical-min convention.
-
-    If ``store`` carries a ``band_key`` column (the bucketed-table
-    store), the rejection join keys on it so the store side scans its
-    buckets with no Exchange — the distinct() and the join both reuse
-    the table's hash bucketing (``band_key = band:bh`` is bijective, so
-    semantics are identical to the (band, bh) join).
 
     The within-batch self-join's posture is MEASURED per batch (r13
     verdict item 8): the largest band bucket is read back (one 1-row
@@ -131,19 +99,9 @@ def dedup_batch_against_store(
 
     if bands is None:
         bands = batch_bands(batch)
-    if "band_key" in store.columns:
-        vs_store = (
-            _with_band_key(bands)
-            .join(
-                store.select("band_key").distinct(), ["band_key"], "left_semi"
-            )
-            .select("doc_id")
-            .distinct()
-        )
-    else:
-        vs_store = bands.join(
-            store.select("band", "bh").distinct(), ["band", "bh"], "left_semi"
-        ).select("doc_id").distinct()
+    vs_store = bands.join(
+        store.select("band", "bh").distinct(), ["band", "bh"], "left_semi"
+    ).select("doc_id").distinct()
     # Measured bucket-local self-join (same skew bound as the batch
     # family): both postures emit ordered pairs a.id < b.id and the
     # salt split is lossless, so rejecting every b.doc_id is exactly
@@ -183,14 +141,11 @@ def append_accepted(
             accepted.select("doc_id").distinct(), "doc_id", "left_semi"
         )
     )
-    out = src.select("doc_id", "band", "bh").withColumn(
-        "batch_id", F.lit(int(batch_id))
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_path)
+    write_generation(
+        src.select("doc_id", "band", "bh").withColumn(
+            "batch_id", F.lit(int(batch_id))
+        ),
+        store_path,
     )
 
 
@@ -198,45 +153,26 @@ def _candidate_pairs(
     bands: DataFrame, store: DataFrame
 ) -> DataFrame:
     """Ordered near-dup candidate pairs (doc_a rejects doc_b): store
-    hits (store doc -> batch doc) plus salted within-batch pairs
-    (lower id -> higher id).  Pure band equi-joins, bucket-local.
-
-    A ``band_key`` column on ``store`` (the bucketed-table store)
-    switches the store join to that key, so the verified path rides the
-    table's bucketing exactly like :func:`store_rejection_join` — no
-    Exchange above the store scan (ADVICE r5).  The within-batch side
-    takes the measured posture (adaptive_bucket_pairs, r13 item 8);
-    the bands relation is deliberately NOT checkpointed here — see
-    :func:`dedup_batch_against_store` on the LogicalRDD-reuse
+    hits (store doc -> batch doc) plus salted within-batch pairs (lower
+    id -> higher id).  Pure band equi-joins, bucket-local.  The
+    within-batch side takes the measured posture (adaptive_bucket_pairs,
+    r13 item 8); the bands relation is deliberately NOT checkpointed
+    here — see :func:`dedup_batch_against_store` on the LogicalRDD-reuse
     hazard."""
     from ..operators.diagnostics import adaptive_bucket_pairs
 
-    if "band_key" in store.columns:
-        vs_store = (
-            _with_band_key(bands)
-            .alias("n")
-            .join(
-                store.alias("s"),
-                F.col("n.band_key") == F.col("s.band_key"),
-            )
-            .select(
-                F.col("s.doc_id").alias("doc_a"),
-                F.col("n.doc_id").alias("doc_b"),
-            )
+    vs_store = (
+        bands.alias("n")
+        .join(
+            store.alias("s"),
+            (F.col("n.band") == F.col("s.band"))
+            & (F.col("n.bh") == F.col("s.bh")),
         )
-    else:
-        vs_store = (
-            bands.alias("n")
-            .join(
-                store.alias("s"),
-                (F.col("n.band") == F.col("s.band"))
-                & (F.col("n.bh") == F.col("s.bh")),
-            )
-            .select(
-                F.col("s.doc_id").alias("doc_a"),
-                F.col("n.doc_id").alias("doc_b"),
-            )
+        .select(
+            F.col("s.doc_id").alias("doc_a"),
+            F.col("n.doc_id").alias("doc_b"),
         )
+    )
     wb_pairs, _salted, _max_cnt = adaptive_bucket_pairs(
         bands, ["band", "bh"], "doc_id"
     )
@@ -360,15 +296,6 @@ def dedup_batch_verified(
     return batch.join(rejected, "doc_id", "left_anti").unionByName(guard)
 
 
-def _accepted_docs(
-    spark: SparkSession, out_path: str, exclude_batch_id: int | None = None
-) -> DataFrame | None:
-    """The accepted documents written so far (None before the first
-    batch), with the same in-flight replay mask and missing-path
-    classification as the band store (shared ``_read_store_or_none``)."""
-    return _read_store_or_none(spark, out_path, exclude_batch_id)
-
-
 def _verified_inputs_or_raise(
     store: DataFrame, accepted: DataFrame | None
 ) -> DataFrame | None:
@@ -422,21 +349,16 @@ def streaming_dedup_sink(
             else:
                 accepted = _verified_inputs_or_raise(
                     store,
-                    _accepted_docs(
-                        spark, out_path, exclude_batch_id=batch_id
-                    ),
+                    read_store_or_none(spark, out_path, batch_id),
                 )
                 survivors = dedup_batch_verified(
                     batch_df, store, accepted, min_jaccard, bands=bands
                 )
             survivors = survivors.persist()
             try:
-                (
-                    survivors.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_path)
+                write_generation(
+                    survivors.withColumn("batch_id", F.lit(int(batch_id))),
+                    out_path,
                 )
                 append_accepted(survivors, store_path, batch_id, bands=bands)
             finally:
@@ -445,289 +367,6 @@ def streaming_dedup_sink(
             bands.unpersist()
 
     return process
-
-
-# --- bucketed signature store (scale path) ----------------------------
-#
-# At steady state the accepted-signature store dwarfs every incoming
-# micro-batch, and the parquet-path store above re-shuffles THE STORE
-# side of the rejection join on every batch.  The bucketed variant
-# persists the store as a table hash-bucketed on the band key: the
-# store side of the join reads its buckets in place (zero Exchange —
-# the write_bucketed_table fact-fact strategy applied to streaming
-# state), so per-batch join cost scales with the batch, not the store.
-
-STORE_BUCKETS = 16
-
-
-def _with_band_key(bands: DataFrame) -> DataFrame:
-    return bands.withColumn(
-        "band_key",
-        F.concat(F.col("band").cast("string"), F.lit(":"), F.col("bh")),
-    )
-
-
-def streaming_dedup_sink_bucketed(
-    store_table: str,
-    out_path: str,
-    num_buckets: int = STORE_BUCKETS,
-    min_jaccard: float | None = None,
-):
-    """``foreachBatch`` callback like :func:`streaming_dedup_sink`, but
-    the signature store is a band-key-bucketed TABLE: first batch
-    creates it (partitioned by batch_id for replay masking, bucketed
-    for the shuffle-free store side), later batches ``insertInto`` it
-    under dynamic partition overwrite — a replayed batch id replaces
-    its own partition only.
-
-    Concurrency caveat: ``insertInto`` does not honor the per-write
-    ``partitionOverwriteMode`` option, so the sink flips the SESSION
-    conf around the insert (saved/restored in a finally).  Any
-    concurrent overwrite-mode write in the same SparkSession during
-    that window inherits dynamic semantics — run this sink in its own
-    SparkSession (or serialize store writes) if other partitioned
-    overwrites share the session.  Structured Streaming invokes
-    ``foreachBatch`` for one batch at a time per query, so the sink
-    never races itself.
-
-    ``min_jaccard`` enables the exact-Jaccard verified mode exactly as
-    on :func:`streaming_dedup_sink` — and candidate generation really
-    does ride the bucketed band store: the store relation keeps its
-    ``band_key`` column, which switches both the rejection join and
-    :func:`_candidate_pairs` onto the table's bucket key, so the store
-    side scans its buckets with no Exchange in either mode (ADVICE
-    r5)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        exists = spark.catalog.tableExists(store_table)
-        if exists:
-            store = (
-                spark.table(store_table)
-                .where(F.col("batch_id") != int(batch_id))
-                .select("doc_id", "band", "bh", "band_key")
-            )
-        else:
-            store = spark.createDataFrame(
-                [], "doc_id long, band int, bh string"
-            )
-        # one persisted band derivation per trigger (see
-        # streaming_dedup_sink): the survivors' store rows below are a
-        # semi-join on it instead of a second tokenize→minhash pass
-        bands = batch_bands(batch_df).persist()
-        try:
-            if min_jaccard is None:
-                survivors = dedup_batch_against_store(
-                    batch_df, store, bands=bands
-                )
-            else:
-                accepted = _verified_inputs_or_raise(
-                    store,
-                    _accepted_docs(
-                        spark, out_path, exclude_batch_id=batch_id
-                    ),
-                )
-                survivors = dedup_batch_verified(
-                    batch_df, store, accepted, min_jaccard, bands=bands
-                )
-            survivors = survivors.persist()
-            try:
-                (
-                    survivors.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_path)
-                )
-                surv_bands = _with_band_key(
-                    bands.join(
-                        survivors.select("doc_id").distinct(),
-                        "doc_id",
-                        "left_semi",
-                    ).select("doc_id", "band", "bh")
-                ).withColumn("batch_id", F.lit(int(batch_id)))
-                if not exists:
-                    (
-                        surv_bands.write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .bucketBy(num_buckets, "band_key")
-                        .sortBy("band_key")
-                        .format("parquet")
-                        .saveAsTable(store_table)
-                    )
-                else:
-                    # session-level conf (saved/restored): the per-write
-                    # option is not visible to the analyzer's
-                    # self-overwrite check, which must see DYNAMIC mode
-                    # to allow replacing only the replayed batch
-                    # partition of a table the same plan reads
-                    conf_key = "spark.sql.sources.partitionOverwriteMode"
-                    prev = spark.conf.get(conf_key, "static")
-                    spark.conf.set(conf_key, "dynamic")
-                    try:
-                        surv_bands.write.mode("overwrite").insertInto(
-                            store_table
-                        )
-                    finally:
-                        spark.conf.set(conf_key, prev)
-            finally:
-                survivors.unpersist()
-        finally:
-            bands.unpersist()
-
-    return process
-
-
-def store_rejection_join(spark: SparkSession, store_table: str, batch: DataFrame):
-    """The store-vs-batch rejection join against the bucketed table —
-    exposed for plan inspection: the store side must scan its buckets
-    with no Exchange above the scan."""
-    bands = _with_band_key(batch_bands(batch))
-    store = spark.table(store_table).select("band_key").distinct()
-    return bands.join(store, ["band_key"], "left_semi")
-
-
-def store_candidate_join(
-    spark: SparkSession, store_table: str, batch: DataFrame
-) -> DataFrame:
-    """The VERIFIED-mode candidate join against the bucketed table —
-    exposed for plan inspection: with the store's ``band_key`` carried
-    through, the store side must likewise scan its buckets with no
-    Exchange above the scan (:func:`_candidate_pairs` band_key path)."""
-    store = spark.table(store_table).select(
-        "doc_id", "band", "bh", "band_key"
-    )
-    return _candidate_pairs(batch_bands(batch), store)
-
-
-def compact_store(
-    spark: SparkSession, store_path: str, upto_batch_id: int
-) -> int:
-    """Fold the signature store's per-batch partitions below
-    ``upto_batch_id`` — plus any previous frozen generations — into a
-    NEW frozen generation (``batch_id = -(g+1)``) and drop the
-    originals.  The standard streaming-state compaction: at one
-    partition (and >= one file) per micro-batch, a long-running
-    ingest accumulates thousands of tiny partitions whose
-    listing/footer overhead dominates every store read.
-
-    Crash safety by construction: the new generation is written to a
-    partition id that never existed, and the folded sources are
-    deleted strictly AFTER that write completes — at no point is any
-    accepted band absent from the store.  A crash between write and
-    deletes leaves both generations present, i.e. duplicate bands,
-    which can only over-reject already-rejected dups (idempotent for
-    dedup semantics), never admit one; re-running compaction folds
-    the leftovers.
-
-    Replay safety is the invariant that sizes ``upto_batch_id``: the
-    sink masks only the IN-FLIGHT batch's own partition, so a batch
-    that may still be replayed must keep its own partition id.  Pass
-    the checkpoint's committed watermark (highest batch id that can
-    never re-run); batches >= upto_batch_id are left untouched.
-
-    Run ONLY with the ingest stream stopped (maintenance window): the
-    final deletes race an in-flight ``accepted_bands`` scan, and with
-    ``spark.sql.files.ignoreMissingFiles=true`` a concurrent reader
-    would silently scan a partial store and admit duplicates — so that
-    conf being set is a hard error here, not a convenience.
-    Returns the number of source partitions folded."""
-    if spark.conf.get("spark.sql.files.ignoreMissingFiles", "false") == "true":
-        raise RuntimeError(
-            "compact_store refuses to run with "
-            "spark.sql.files.ignoreMissingFiles=true: a concurrent store "
-            "reader racing the post-fold deletes would silently read a "
-            "partial store and admit duplicates"
-        )
-    from .compaction import partition_batch_ids_path
-
-    df = spark.read.parquet(store_path)
-    bids = partition_batch_ids_path(spark, store_path)  # metadata, no job
-    fold_ids = [
-        b for b in bids if b < 0 or (0 <= b < int(upto_batch_id))
-    ]
-    if len(fold_ids) <= 1 and not any(b >= 0 for b in fold_ids):
-        return 0  # nothing but (at most) one frozen generation
-    next_gen = min([b for b in bids if b < 0], default=0) - 1
-    folded = df.where(F.col("batch_id").isin(fold_ids))
-    (
-        folded.select("doc_id", "band", "bh")
-        .withColumn("batch_id", F.lit(int(next_gen)))
-        .coalesce(max(1, len(fold_ids) // 8))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_path)
-    )
-    # sources go away only now — the new generation is durably in place
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    fs = jvm.Path(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    for bid in fold_ids:
-        fs.delete(jvm.Path(f"{store_path}/batch_id={bid}"), True)
-    return len(fold_ids)
-
-
-def compact_store_table(
-    spark: SparkSession, store_table: str, upto_batch_id: int
-) -> int:
-    """:func:`compact_store` for the BUCKETED table store: fold every
-    committed per-batch partition below the replay watermark (plus any
-    previous frozen generations) into a new frozen partition
-    (``batch_id = -(g+1)``) and drop the sources.
-
-    Same two-phase crash contract as the parquet path — the frozen
-    generation is inserted (dynamic partition overwrite, preserving the
-    table's band-key bucketing so the store side of the rejection join
-    stays Exchange-free) strictly BEFORE the source partitions are
-    dropped via ``ALTER TABLE .. DROP PARTITION``; a crash in between
-    leaves duplicate bands, which can only over-reject near-dups, never
-    admit one.  Run with the ingest stream stopped (the drops race an
-    in-flight store scan), and see
-    :func:`streaming_dedup_sink_bucketed` for the session-scoped
-    ``partitionOverwriteMode`` caveat the insert shares.
-    Returns the number of source partitions folded."""
-    if spark.conf.get("spark.sql.files.ignoreMissingFiles", "false") == "true":
-        raise RuntimeError(
-            "compact_store_table refuses to run with "
-            "spark.sql.files.ignoreMissingFiles=true (see compact_store)"
-        )
-    from .compaction import partition_batch_ids_table
-
-    df = spark.table(store_table)
-    bids = partition_batch_ids_table(spark, store_table)  # metadata
-    fold_ids = [
-        b for b in bids if b < 0 or (0 <= b < int(upto_batch_id))
-    ]
-    if len(fold_ids) <= 1 and not any(b >= 0 for b in fold_ids):
-        return 0  # nothing but (at most) one frozen generation
-    next_gen = min([b for b in bids if b < 0], default=0) - 1
-    # insertInto is positional: select in the table's column order
-    # (data cols first, partition col last, as saveAsTable laid it out)
-    data_cols = [c for c in df.columns if c != "batch_id"]
-    folded = (
-        df.where(F.col("batch_id").isin(fold_ids))
-        .select(*data_cols)
-        .withColumn("batch_id", F.lit(int(next_gen)))
-    )
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        folded.write.mode("overwrite").insertInto(store_table)
-    finally:
-        spark.conf.set(conf_key, prev)
-    # sources go away only now — the frozen generation is durably in place
-    for bid in fold_ids:
-        spark.sql(
-            f"ALTER TABLE {store_table} DROP IF EXISTS "
-            f"PARTITION (batch_id={int(bid)})"
-        )
-    return len(fold_ids)
 
 
 def delete_doc_signatures(
@@ -752,16 +391,8 @@ def delete_doc_signatures(
     consistent: candidates against an erased doc cannot arise (its
     bands are gone), so its missing shingles are never needed.
 
-    Applies to the parquet-path store.  The bucketed-TABLE store
-    variant is not wrapped here: plain Spark tables have no ACID
-    ``DELETE`` (that is a lakehouse-format feature), so it erases the
-    same way this does — ``INSERT OVERWRITE`` each touched batch
-    partition with its survivors (which preserves the table's
-    bucketing) plus ``ALTER TABLE .. DROP PARTITION`` for emptied
-    ones.  Returns the number of partitions rewritten across both
+    Returns the number of partitions rewritten across both
     artifacts."""
-    from .compaction import erase_rows
-
     ids = [int(d) for d in doc_ids]
     n = erase_rows(spark, store_path, "doc_id", ids)
     n += erase_rows(spark, out_path, "doc_id", ids)

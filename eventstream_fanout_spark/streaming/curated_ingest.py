@@ -26,7 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .corpus_dedup import _read_store_or_none, streaming_dedup_sink
+from .compaction import read_store_or_none
+from .corpus_dedup import streaming_dedup_sink
 from .text_ingest import streaming_text_index_sink
 from .vector_dedup import streaming_vector_dedup_sink
 
@@ -46,10 +47,8 @@ def curated_ingest_sink(
 
     def process(batch_df, batch_id: int) -> None:
         dedup(batch_df, batch_id)
-        admitted = _read_store_or_none(
-            batch_df.sparkSession,
-            f"{out_path}/batch_id={int(batch_id)}",
-            exclude_batch_id=None,
+        admitted = read_store_or_none(
+            batch_df.sparkSession, f"{out_path}/batch_id={int(batch_id)}"
         )
         if admitted is None:  # empty batch or everything rejected
             return
@@ -100,10 +99,8 @@ def curated_multimodal_ingest_sink(
 
     def process(batch_df, batch_id: int) -> None:
         dedup(batch_df, batch_id)
-        admitted = _read_store_or_none(
-            batch_df.sparkSession,
-            f"{out_path}/batch_id={int(batch_id)}",
-            exclude_batch_id=None,
+        admitted = read_store_or_none(
+            batch_df.sparkSession, f"{out_path}/batch_id={int(batch_id)}"
         )
         if admitted is None:  # empty batch or everything rejected
             return

@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compaction import write_generation
+
 Sink = Callable[[DataFrame, int], None]
 
 
@@ -38,30 +40,22 @@ class FanoutSink:
 
 def parquet_sink(
     path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
     project: Callable[[DataFrame], DataFrame] | None = None,
 ) -> FanoutSink:
     """Warehouse sink (reference K2, ClickHouse stand-in): executor-side
     partitioned parquet append, batch-id-keyed for idempotent replay.
 
     Layout: ``{path}/batch_id={id}/...`` — a replayed batch id
-    overwrites its own directory (dynamic partition overwrite), never
-    duplicates.  ``partition_by`` adds warehouse-style partitions
-    (e.g. month(event_ts) mirroring reference clickhouse/init.sql:21).
-    ``project`` applies a final typed projection at the sink boundary
-    (e.g. :func:`operators.enrichment.warehouse_typed` for the
+    overwrites its own directory (compaction.write_generation), never
+    duplicates.  ``project`` applies a final typed projection at the
+    sink boundary (e.g. :func:`operators.enrichment.warehouse_typed` for the
     Decimal(5,2) ``engagement_pct`` the reference DDL declares).
     """
 
     def write(df: DataFrame, batch_id: int) -> None:
         if project is not None:
             df = project(df)
-        out = df.withColumn("batch_id", F.lit(batch_id))
-        writer = out.write.mode(mode).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-        writer.partitionBy("batch_id", *partition_by).parquet(path)
+        write_generation(df.withColumn("batch_id", F.lit(batch_id)), path)
 
     return FanoutSink("warehouse", write)
 
@@ -146,14 +140,19 @@ def fanout_batch_fn(
 ):
     """Build the ``foreachBatch`` callback: optional per-batch transform
     (e.g. the enrichment join), then every sink in order (reference K1
-    semantics: one coordinated function per micro-batch)."""
+    semantics: one coordinated function per micro-batch).
+
+    The emptiness check runs on the persisted transformed frame, not
+    on the raw batch: an action on ``batch_df`` before the sinks re-reads
+    the batch's source rows, which Structured Streaming adds to the
+    trigger's ``numInputRows``."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # P7 (modern idiom vs rdd.isEmpty)
-            return
         df = transform(batch_df) if transform else batch_df
         df.persist()
         try:
+            if df.isEmpty():  # P7 (modern idiom vs rdd.isEmpty)
+                return
             for sink in sinks:
                 sink.write(df, batch_id)
         finally:

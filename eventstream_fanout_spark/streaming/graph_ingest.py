@@ -47,9 +47,8 @@ partitions (postings/nodes/edges/ranks for b never see b+1 data).
 Scale shape: the delta's touched-shingle set joins back against the
 postings store on ``g``; a rare shingle's posting list is <= DF_MAX
 rows, so the pair join is delta-bounded.  The postings store is a
-``g``-bucketed TABLE (the streaming/corpus_dedup.py bucketed-store
-pattern, promoted from documented knob to the shipped layout —
-round-13 verdict item 1): every per-refresh read of the store — the
+``g``-bucketed TABLE (compaction.write_table_generation — round-13
+verdict item 1): every per-refresh read of the store — the
 touched join, the df re-check, the pair self-join, and the full
 rebuild's groupBy — keys on ``g``, so the store side scans its
 buckets in place with NO Exchange (pinned by
@@ -57,7 +56,7 @@ tests/test_graph_ingest.py::test_postings_store_is_bucketed...), and
 per-refresh shuffle cost scales with the DELTA, not the store.
 Partitioned by ``batch_id`` on top of the bucketing so the as-of
 reads (``batch_id <= b``) partition-prune and replays overwrite only
-their own partition (dynamic overwrite, the corpus_dedup discipline).
+their own partition (dynamic overwrite).
 """
 
 from __future__ import annotations
@@ -75,9 +74,16 @@ from ..operators.graph import (
     SHINGLE_N,
     pagerank_integer,
 )
-
-
-POSTINGS_BUCKETS = 16
+from .compaction import (
+    compact_table_manifest,
+    live_batch_ids,
+    manifest_watermark,
+    read_compact_manifest,
+    read_store_or_none,
+    visible_partitions,
+    write_partition_dir,
+    write_table_generation,
+)
 
 
 def _batch_postings(docs: DataFrame) -> DataFrame:
@@ -106,43 +112,9 @@ def postings_table_name(store: str) -> str:
     return "graph_postings_" + hashlib.md5(store.encode()).hexdigest()[:12]
 
 
-def _write_postings(
-    spark: SparkSession, store: str, sh_b: DataFrame, batch_id: int
-) -> None:
-    """Land one batch's postings into the ``g``-bucketed table.
-
-    First batch creates the table (partitioned by batch_id for the
-    as-of reads + replay masking, bucketed+sorted by ``g`` for the
-    shuffle-free store side of every refresh join); later batches
-    ``insertInto`` under dynamic partition overwrite, so a replayed
-    batch id replaces exactly its own partition.  Column order matches
-    the saveAsTable layout (data cols first, partition col last) —
-    insertInto binds by position.  Same session-conf flip + caveat as
-    corpus_dedup's bucketed sink: run store writes in their own
-    SparkSession if OTHER partitioned overwrite-mode writes race this
-    one (foreachBatch itself never races within a query)."""
-    tbl = postings_table_name(store)
-    out = sh_b.select(
-        "g", "source", "doc_id",
-        F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-    )
-    if not spark.catalog.tableExists(tbl):
-        (
-            out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .bucketBy(POSTINGS_BUCKETS, "g")
-            .sortBy("g")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        return
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        out.write.mode("overwrite").insertInto(tbl)
-    finally:
-        spark.conf.set(conf_key, prev)
+def postings_manifest_path(store: str) -> str:
+    """The postings table's compaction manifest."""
+    return f"{store}/postings_compact_manifest"
 
 
 def read_postings(
@@ -160,24 +132,14 @@ def read_postings(
     change mid-call (compaction shares the maintenance window), so
     callers read it once instead of paying the exists-probe + 1-row
     collect per consumer (r14)."""
-    from .compaction import read_compact_manifest, visible_partitions
-
     wm, frozen = (
-        read_compact_manifest(spark, f"{store}/postings_compact_manifest")
+        read_compact_manifest(spark, postings_manifest_path(store))
         if manifest is None
         else manifest
     )
     return visible_partitions(
         spark.table(postings_table_name(store)), wm, frozen
     )
-
-
-def _postings_watermark(spark: SparkSession, store: str) -> int:
-    from .compaction import read_compact_manifest
-
-    return read_compact_manifest(
-        spark, f"{store}/postings_compact_manifest"
-    )[0]
 
 
 def compact_postings(
@@ -194,29 +156,13 @@ def compact_postings(
     rebuild_graph_store guards) — compaction deliberately trades that
     time travel for a bounded partition count.  Run with the ingest
     stream stopped."""
-    from .compaction import compact_table_manifest
-
     return compact_table_manifest(
         spark,
         postings_table_name(store),
-        f"{store}/postings_compact_manifest",
+        postings_manifest_path(store),
         upto_batch_id,
         lambda df: df.dropDuplicates(["g", "source", "doc_id"]),
     )
-
-
-def _write_partition(df: DataFrame, path: str, batch_id: int,
-                     key: str = "batch_id") -> None:
-    """Overwrite exactly one ``key=<v>`` partition directory.
-
-    Written as a STATIC overwrite of the subdir (same idempotence as
-    a batch-id-keyed dynamic overwrite) rather than
-    partitionBy+dynamic: an EMPTY relation still commits a
-    schema-bearing zero-row file (SPARK-23271), so a legitimate empty
-    partition — a delta with no new pairs, a rebuild that empties the
-    edge set — never leaves the store unreadable
-    (UNABLE_TO_INFER_SCHEMA on the next partition-discovery read)."""
-    df.write.mode("overwrite").parquet(f"{path}/{key}={batch_id}")
 
 
 def ingest_graph_batch(
@@ -235,11 +181,7 @@ def ingest_graph_batch(
     partitions were folded away, so a replay could neither rewrite
     identical bytes nor even see its own postings.
     """
-    from .compaction import read_compact_manifest
-
-    manifest = read_compact_manifest(
-        spark, f"{store}/postings_compact_manifest"
-    )
+    manifest = read_compact_manifest(spark, postings_manifest_path(store))
     wm = manifest[0]
     if int(batch_id) < wm:
         raise ValueError(
@@ -254,8 +196,15 @@ def ingest_graph_batch(
     # deterministic, and the second use reads the just-written
     # bucketed partition instead of recomputing the tokenize.
     sh_b = _batch_postings(docs_batch)
-    _write_postings(spark, store, sh_b, batch_id)
-    _write_partition(
+    write_table_generation(
+        sh_b.select(
+            "g", "source", "doc_id",
+            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
+        ),
+        postings_table_name(store),
+        "g",
+    )
+    write_partition_dir(
         docs_batch.select("source").distinct(), f"{store}/nodes", batch_id
     )
 
@@ -300,7 +249,7 @@ def ingest_graph_batch(
         .distinct()
     )
     try:
-        _write_partition(pairs, f"{store}/edges", batch_id)
+        write_partition_dir(pairs, f"{store}/edges", batch_id)
     finally:
         bounded.unpersist()
         plist.unpersist()
@@ -314,7 +263,7 @@ def ingest_graph_batch(
     pinned = _pinned_epoch(spark, store, batch_id)
     if pinned is _NO_MARKER:
         epoch = _rebuild_epoch_asof(spark, store, batch_id)
-        _write_partition(
+        write_partition_dir(
             spark.range(1).select(
                 F.lit(-1 if epoch is None else epoch)
                 .cast("int")
@@ -331,7 +280,7 @@ def ingest_graph_batch(
         .select("source")
         .distinct()
     )
-    _write_partition(
+    write_partition_dir(
         pagerank_integer(
             nodes_asof,
             _edges_with_epoch(spark, store, batch_id, epoch),
@@ -350,8 +299,6 @@ def _pinned_epoch(spark: SparkSession, store: str, batch_id: int):
     """The epoch this batch's rank generation was pinned to: _NO_MARKER
     if the batch never ran, else the pinned epoch (None = no rebuild
     was visible).  One request-sized collect (one row per batch)."""
-    from .compaction import read_store_or_none
-
     markers = read_store_or_none(spark, f"{store}/rank_markers")
     if markers is None:
         return _NO_MARKER
@@ -370,8 +317,6 @@ def _rebuild_epoch_asof(
     legitimate rebuild can produce an EMPTY edge set (every shingle's
     df out of band), and an epoch must stay visible with zero rows.
     One tiny aggregate collect (maintenance-cadence-sized)."""
-    from .compaction import read_store_or_none
-
     man = read_store_or_none(spark, f"{store}/rebuild_manifest")
     if man is None:
         return None
@@ -438,11 +383,7 @@ def rebuild_graph_store(
     Epochs below ``watermark - 1`` are REFUSED: the frozen postings
     generation covers [0, watermark) as one unit, so an as-of read
     under it cannot exclude the folded batches above the epoch."""
-    from .compaction import read_compact_manifest
-
-    manifest = read_compact_manifest(
-        spark, f"{store}/postings_compact_manifest"
-    )
+    manifest = read_compact_manifest(spark, postings_manifest_path(store))
     wm = manifest[0]
     if int(epoch) < wm - 1:
         raise ValueError(
@@ -476,7 +417,7 @@ def rebuild_graph_store(
         .distinct()
     )
     try:
-        _write_partition(
+        write_partition_dir(
             pairs, f"{store}/edges_rebuilt", epoch, key="epoch"
         )
     finally:
@@ -486,7 +427,7 @@ def rebuild_graph_store(
     # visible to edges_asof only once its edge set is fully on disk
     # (and stays visible even when that set is legitimately empty —
     # partition rows cannot witness an empty epoch, a manifest can)
-    _write_partition(
+    write_partition_dir(
         spark.range(1).select(F.lit(epoch).cast("int").alias("e")),
         f"{store}/rebuild_manifest",
         epoch,
@@ -498,9 +439,8 @@ def postings_touched_join(
     spark: SparkSession, store: str, batch_id: int
 ) -> DataFrame:
     """The refresh's store-vs-touched join — exposed for plan
-    inspection (corpus_dedup's store_rejection_join discipline): the
-    store side must scan its buckets in place, no Exchange between
-    its scan and the join."""
+    inspection: the store side must scan its buckets in place, no
+    Exchange between its scan and the join."""
     touched = (
         read_postings(spark, store)
         .where(F.col("batch_id") == batch_id)
@@ -570,22 +510,6 @@ def whole_groups(batch_df: DataFrame) -> list[int]:
     return sorted(int(r["grp"]) for r in rows)
 
 
-def live_posting_ids(spark: SparkSession, store: str) -> list[int]:
-    """Non-frozen postings partitions currently serving: batch ids at
-    or above the compaction watermark.  Partition-metadata-sized."""
-    from .compaction import partition_batch_ids_table
-
-    wm = _postings_watermark(spark, store)
-    tbl = postings_table_name(store)
-    if not spark.catalog.tableExists(tbl):
-        return []
-    return sorted(
-        b
-        for b in partition_batch_ids_table(spark, tbl)  # metadata, no job
-        if b >= wm
-    )
-
-
 def graph_ingest_sink(store: str, max_live_parts: int | None = None):
     """foreachBatch sink driving the incremental graph refresh from a
     real stream.
@@ -617,7 +541,7 @@ def graph_ingest_sink(store: str, max_live_parts: int | None = None):
             return
         spark = batch_df.sparkSession
         grps = whole_groups(batch_df)  # census + guard, one pass (r14)
-        wm = _postings_watermark(spark, store)
+        wm = manifest_watermark(spark, postings_manifest_path(store))
         for g in grps:
             if g < wm:
                 continue  # folded away — outputs already durable
@@ -630,7 +554,11 @@ def graph_ingest_sink(store: str, max_live_parts: int | None = None):
                 g,
             )
         if max_live_parts is not None:
-            live = live_posting_ids(spark, store)
+            live = live_batch_ids(
+                spark,
+                postings_table_name(store),
+                postings_manifest_path(store),
+            )
             if len(live) >= max_live_parts:
                 compact_postings(
                     spark, store, upto_batch_id=max(live) + 1

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.hybrid import hybrid_batch_rrf
+from .compaction import write_generation
 
 
 def streaming_hybrid_probe_sink(
@@ -50,12 +51,9 @@ def streaming_hybrid_probe_sink(
             attr_pred_text=attr_pred_text,
             attr_pred_vec=attr_pred_vec,
         )
-        (
-            topk.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        write_generation(
+            topk.withColumn("batch_id", F.lit(int(batch_id))),
+            out_path,
         )
 
     return process

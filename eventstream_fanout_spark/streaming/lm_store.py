@@ -22,8 +22,8 @@ Store layout (both BUCKETED tables, names derived from ``root``):
 
 Both tables are partitioned by ``batch_id`` (dynamic-overwrite
 replay masking + as-of partition pruning) and hash-bucketed on their
-count key (the corpus_dedup bucketed-store pattern, promoted from
-documented knob to the shipped layout — round-13 verdict item 2):
+count key (compaction.write_table_generation — round-13 verdict
+item 2):
 serving's merge is a ``groupBy(lang, bg)`` / ``groupBy(lang, tok)``,
 and HashPartitioning on the bucket column satisfies the clustered
 distribution of any grouping that contains it, so the merge
@@ -62,8 +62,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.lm import bigram_counts, doc_tokens
-
-LM_STORE_BUCKETS = 16
+from .compaction import (
+    compact_table_manifest,
+    live_batch_ids,
+    manifest_watermark,
+    read_compact_manifest,
+    visible_partitions,
+    write_partition_dir,
+    write_table_generation,
+)
 
 
 def lm_table_name(root: str, kind: str) -> str:
@@ -84,42 +91,21 @@ _KEYED = {"bigrams": ("bg", ("lang", "bg", "c")),
 def _write_delta(
     spark: SparkSession, root: str, kind: str, df: DataFrame, batch_id: int
 ) -> None:
-    """Land one delta into the ``kind`` table: create-on-first-batch
-    (partitioned by batch_id, bucketed+sorted on the count key), then
-    ``insertInto`` under dynamic partition overwrite — a replayed
-    batch id replaces exactly its own partition (graph_ingest's
-    _write_postings discipline, including the session-conf-flip
-    caveat)."""
+    """Land one delta into the ``kind`` table (bucketed on the count
+    key); a replayed batch id replaces exactly its own partition."""
     bucket_col, cols = _KEYED[kind]
-    tbl = lm_table_name(root, kind)
-    out = df.select(
-        *cols, F.lit(int(batch_id)).cast("bigint").alias("batch_id")
+    write_table_generation(
+        df.select(
+            *cols, F.lit(int(batch_id)).cast("bigint").alias("batch_id")
+        ),
+        lm_table_name(root, kind),
+        bucket_col,
     )
-    if not spark.catalog.tableExists(tbl):
-        (
-            out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .bucketBy(LM_STORE_BUCKETS, bucket_col)
-            .sortBy(bucket_col)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        return
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        out.write.mode("overwrite").insertInto(tbl)
-    finally:
-        spark.conf.set(conf_key, prev)
 
 
-def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
-    """Static overwrite of one batch_id subdir (graph_ingest pattern:
-    an empty delta still commits a schema-bearing zero-row file, so
-    partition-discovery reads never break).  Used by the SCORES sink
-    only — the count stores are bucketed tables."""
-    df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
+def lm_manifest_path(root: str, kind: str) -> str:
+    """The ``kind`` table's compaction manifest."""
+    return f"{root}/compact_manifest_{kind}"
 
 
 def _token_counts(
@@ -133,19 +119,11 @@ def _token_counts(
     )
 
 
-def _lm_watermark(spark: SparkSession, root: str, kind: str) -> int:
-    from .compaction import read_compact_manifest
-
-    return read_compact_manifest(
-        spark, f"{root}/compact_manifest_{kind}"
-    )[0]
-
-
 def _guard_below_watermark(
     spark: SparkSession, root: str, batch_id: int
 ) -> None:
     for kind in _KEYED:
-        wm = _lm_watermark(spark, root, kind)
+        wm = manifest_watermark(spark, lm_manifest_path(root, kind))
         if int(batch_id) < wm:
             raise ValueError(
                 f"batch_id={batch_id} is below the {kind} compaction "
@@ -167,8 +145,6 @@ def compact_lm_store(
     construction.  Batch replays and as-of serves below the watermark
     are refused afterwards.  Run with the ingest stream stopped.
     Returns total live partitions folded across both tables."""
-    from .compaction import compact_table_manifest
-
     total = 0
     for kind, (_bucket, cols) in _KEYED.items():
         if not spark.catalog.tableExists(lm_table_name(root, kind)):
@@ -177,7 +153,7 @@ def compact_lm_store(
         total += compact_table_manifest(
             spark,
             lm_table_name(root, kind),
-            f"{root}/compact_manifest_{kind}",
+            lm_manifest_path(root, kind),
             upto_batch_id,
             lambda df, keys=keys: (
                 df.groupBy(*keys)
@@ -248,11 +224,7 @@ def _visible(
     frozen generation plus live deltas in [watermark, gen].  Refuses
     gens below watermark - 1 — the frozen generation covers
     [0, watermark) as one unit and cannot be split at serve time."""
-    from .compaction import read_compact_manifest, visible_partitions
-
-    wm, frozen = read_compact_manifest(
-        spark, f"{root}/compact_manifest_{kind}"
-    )
+    wm, frozen = read_compact_manifest(spark, lm_manifest_path(root, kind))
     if int(gen) < wm - 1:
         raise ValueError(
             f"as-of gen {gen} is below the {kind} compaction "
@@ -349,24 +321,6 @@ def serve_vocab_sizes(
     )
 
 
-def live_delta_ids(spark: SparkSession, root: str) -> list[int]:
-    """The non-frozen delta partitions currently serving: batch ids at
-    or above the compaction watermark in the bigrams table (both
-    tables ingest the same groups in lockstep, so one table's census
-    stands for both).  Partition-metadata-sized collect."""
-    from .compaction import partition_batch_ids_table
-
-    wm = _lm_watermark(spark, root, "bigrams")
-    tbl = lm_table_name(root, "bigrams")
-    if not spark.catalog.tableExists(tbl):
-        return []
-    return sorted(
-        b
-        for b in partition_batch_ids_table(spark, tbl)  # metadata, no job
-        if b >= wm
-    )
-
-
 def lm_ingest_sink(store: str, max_live_parts: int | None = None):
     """foreachBatch sink driving LM store ingest from a real stream.
 
@@ -411,7 +365,7 @@ def lm_ingest_sink(store: str, max_live_parts: int | None = None):
 
         spark = batch_df.sparkSession
         grps = whole_groups(batch_df)  # census + guard, one pass (r14)
-        wm = _lm_watermark(spark, store, "bigrams")
+        wm = manifest_watermark(spark, lm_manifest_path(store, "bigrams"))
         for g in grps:
             if g < wm:
                 continue  # folded away — delta already durable
@@ -422,7 +376,13 @@ def lm_ingest_sink(store: str, max_live_parts: int | None = None):
                 g,
             )
         if max_live_parts is not None:
-            live = live_delta_ids(spark, store)
+            # both tables ingest the same groups in lockstep, so the
+            # bigrams census stands for both
+            live = live_batch_ids(
+                spark,
+                lm_table_name(store, "bigrams"),
+                lm_manifest_path(store, "bigrams"),
+            )
             if len(live) >= max_live_parts:
                 compact_lm_store(
                     spark, store, upto_batch_id=max(live) + 1
@@ -452,6 +412,6 @@ def lm_scoring_sink(root: str, out: str, gen: int):
             context_counts(big),
             serve_vocab_sizes(spark, root, gen),
         )
-        _write_partition(scored, f"{out}/scores", batch_id)
+        write_partition_dir(scored, f"{out}/scores", batch_id)
 
     return sink

@@ -24,8 +24,8 @@ O(corpus) and never O(model refits).
 
 100 TB note: at web-scale vocabulary the weight relation should be
 bucketed by ``tok`` so the per-batch join co-locates without a
-model-side shuffle (the bucketed-store pattern of
-streaming/corpus_dedup.py:196); at the fixture scales the plain
+model-side shuffle (compaction.write_table_generation, the layout of
+the graph and LM stores); at the fixture scales the plain
 parquet store + shuffle join measures faster, so bucketing stays a
 documented knob rather than a default.
 """
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.classify import token_weight_classify
+from .compaction import read_store_or_none, write_generation
 
 
 def save_token_model(
@@ -53,12 +54,10 @@ def save_token_model(
     of the SAME call heals it (dynamic overwrite of the partition).
     """
     for rel, df in (("weights", weights), ("priors", priors)):
-        (
-            df.withColumn("gen", F.lit(generation).cast("int"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(f"{path}/{rel}")
+        write_generation(
+            df.withColumn("gen", F.lit(generation).cast("int")),
+            f"{path}/{rel}",
+            "gen",
         )
 
 
@@ -90,8 +89,6 @@ def load_token_model(
 def _pinned_gen(
     spark: SparkSession, out_path: str, batch_id: int
 ) -> int | None:
-    from .compaction import read_store_or_none
-
     markers = read_store_or_none(spark, f"{out_path}/markers")
     if markers is None:
         return None
@@ -129,26 +126,20 @@ def streaming_scoring_sink(
                 .collect()[0][0]
             )
             gen = int(latest)
-            (
+            write_generation(
                 spark.range(1)
                 .select(
                     F.lit(batch_id).cast("long").alias("batch_id"),
                     F.lit(gen).cast("int").alias("gen"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_path}/markers")
+                ),
+                f"{out_path}/markers",
             )
         weights, priors = load_token_model(spark, model_path, generation=gen)
         preds = token_weight_classify(batch_df, weights, priors, class_col)
-        (
+        write_generation(
             preds.withColumn("gen", F.lit(gen).cast("int"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/preds")
+            .withColumn("batch_id", F.lit(batch_id).cast("long")),
+            f"{out_path}/preds",
         )
 
     return sink

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.diagnostics import QVAL
+from .compaction import write_generation
 
 
 def rollup_minute_sink(out_path: str):
@@ -44,12 +45,7 @@ def rollup_minute_sink(out_path: str):
             )
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        write_generation(partial, out_path)
 
     return sink
 

@@ -62,12 +62,3 @@ def json_file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path).withColumnRenamed("value", "value")
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source (timestamp, value) for load/latency tests."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )

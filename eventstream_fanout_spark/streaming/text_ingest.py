@@ -64,15 +64,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text_index import batch_stats, doc_postings
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Missing-path → None; any OTHER read failure propagates (the
-    shared fail-closed classification — a corrupt tombstones table
-    must not be mistaken for "no erasure ever ran")."""
-    from .compaction import read_store_or_none
-
-    return read_store_or_none(spark, path)
+from .compaction import (
+    attrs_swap,
+    compact_generations,
+    delete_path,
+    erase_rows,
+    path_exists,
+    read_store_or_none,
+    write_generation,
+)
 
 
 def streaming_text_index_sink(
@@ -101,13 +101,14 @@ def streaming_text_index_sink(
         # their per-tok row count, stats the doclens rollup.  Before,
         # each of the 4-5 generation writes re-ran the explode→tf→dl
         # tree over the batch.
-        postings, _dl = doc_postings(batch_df.select("doc_id", "text"))
-        (
-            postings.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/postings")
+        # doc_id lands as the store's LongType whatever the batch's
+        # integral type, so every generation shares one column type
+        postings, _dl = doc_postings(
+            batch_df.select(F.col("doc_id").cast("long"), "text")
+        )
+        write_generation(
+            postings.withColumn("batch_id", F.lit(int(batch_id))),
+            f"{index_path}/postings",
         )
         # The read-back is SCHEMA-SPECIFIED (r15 — the vector-dedup
         # sink's SPARK-23271 lesson): a first-ever batch of all-empty
@@ -134,7 +135,7 @@ def streaming_text_index_sink(
         # so the crash window stays detectable-missing.  Fail-closed:
         # an attrs store whose metadata columns the batch does not
         # carry raises instead of appending uncovered postings.
-        attrs_store = _read_or_none(spark, f"{index_path}/attrs")
+        attrs_store = read_store_or_none(spark, f"{index_path}/attrs")
         rels = [
             (dl, "doclens"),
             (vocab, "vocab"),
@@ -176,12 +177,9 @@ def streaming_text_index_sink(
                 rel = rel.observe(
                     stats_obs, F.sum("n_docs").alias("n")
                 )
-            (
-                rel.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{index_path}/{name}")
+            write_generation(
+                rel.withColumn("batch_id", F.lit(int(batch_id))),
+                f"{index_path}/{name}",
             )
         # the generation's id bloom (round 11 — the uniqueness gate's
         # metadata-sized side).  Written AFTER stats: a crash before
@@ -233,7 +231,7 @@ def _idbloom_maybe_ids(
     partition listing before trusting the blooms."""
     from ..operators.text_index import IDBLOOM_K, IDBLOOM_WORD, _idbloom_pos
 
-    stats = _read_or_none(spark, f"{index_path}/stats")
+    stats = read_store_or_none(spark, f"{index_path}/stats")
     if stats is not None:
         # LIVE corpus size: sum ALL rollup rows, negative erasure-
         # correction generations included (ADVICE r11) — summing only
@@ -245,10 +243,10 @@ def _idbloom_maybe_ids(
         ) or 0
         if n_docs < _IDBLOOM_MIN_CORPUS:
             return None  # measured crossover: the full scan is cheaper
-    blooms = _read_or_none(spark, f"{index_path}/idbloom")
+    blooms = read_store_or_none(spark, f"{index_path}/idbloom")
     if blooms is None:
         return None
-    stored = _read_or_none(spark, f"{index_path}/doclens")
+    stored = read_store_or_none(spark, f"{index_path}/doclens")
     if stored is None:
         return []
     # partition-column-only listings — metadata-sized
@@ -356,16 +354,14 @@ def _check_new_doc_ids(
     original full anti-join, so the fail-closed contract is
     byte-identical; blooms can only be OVER-approximate (erased ids
     linger until compaction — they cost a narrow probe that finds
-    nothing, never a missed clash)."""
-    from py4j.java_gateway import java_import
+    nothing, never a missed clash).
 
+    ``doc_id`` is read as the store's ``LongType`` whatever the
+    batch's integral type: the clash join compares values, and a
+    batch-typed read schema would not match the stored column."""
     from pyspark.sql import types as T
 
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    dlp = jvm.Path(f"{index_path}/doclens")
-    fs = dlp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(dlp):
+    if not path_exists(spark, f"{index_path}/doclens"):
         return  # no store yet — the batch founds it
     # The read is SCHEMA-SPECIFIED (r15, SPARK-23271): a first batch
     # whose docs all had NULL text commits only _SUCCESS under dynamic
@@ -376,7 +372,7 @@ def _check_new_doc_ids(
     stored = spark.read.schema(
         T.StructType(
             [
-                batch_df.schema["doc_id"],
+                T.StructField("doc_id", T.LongType()),
                 T.StructField("dl", T.LongType()),
                 T.StructField("batch_id", T.LongType()),
             ]
@@ -453,14 +449,7 @@ def _rebuild_idbloom(spark: SparkSession, index_path: str) -> None:
     # drop the whole table first: blooms for folded-away generations
     # must not linger (the gate checks doclens gens against bloom
     # gens, so a crash mid-rebuild only forces fallback, never a miss)
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    bp = jvm.Path(f"{index_path}/idbloom")
-    fs = bp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(bp):
-        fs.delete(bp, True)
+    delete_path(spark, f"{index_path}/idbloom")
     for g in gens:
         write_idbloom(
             spark,
@@ -468,62 +457,6 @@ def _rebuild_idbloom(spark: SparkSession, index_path: str) -> None:
             dl.where(F.col("batch_id") == g).select("doc_id"),
             int(g),
         )
-
-
-def _erasure_deltas(
-    spark: SparkSession, index_path: str, new_ids: list[int]
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(vocab_delta, stats_delta, tombstone_rows) for the doomed ids —
-    every relation is filtered ``doc_id IN new_ids`` (a pushed parquet
-    predicate, pinned by pytest): the correction derives from exactly
-    the rows the eraser is about to remove, never from a full-store
-    aggregate."""
-    doomed_p = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("doc_id").isin(new_ids)
-    )
-    doomed_dl = spark.read.parquet(f"{index_path}/doclens").where(
-        F.col("doc_id").isin(new_ids)
-    )
-    vocab_delta = doomed_p.groupBy("tok").agg(
-        (-F.count(F.lit(1))).cast("bigint").alias("df")
-    )
-    stats_delta = doomed_dl.agg(
-        (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
-        (-F.coalesce(F.sum("dl"), F.lit(0))).cast("bigint").alias(
-            "total_len"
-        ),
-    )
-    return vocab_delta, stats_delta, doomed_dl.select("doc_id")
-
-
-def _next_correction_gen(spark: SparkSession, index_path: str) -> int:
-    """Allocate the correction generation id: one below every
-    STRUCTURAL generation (stats rows with ``n_docs >= 0`` — the
-    build, folds, and ingests) and every COMMITTED correction
-    (tombstone generations).  An ORPHANED correction — vocab/stats
-    delta partitions whose tombstone (the commit marker, written last)
-    never landed — is deliberately NOT counted: the re-run reallocates
-    the SAME id and dynamic-overwrites the orphan partitions exactly,
-    which is what makes the crashed-erasure re-run converge instead of
-    double-correcting."""
-    structural = [
-        r["batch_id"]
-        for r in spark.read.parquet(f"{index_path}/stats")
-        .where(F.col("n_docs") >= 0)
-        .select("batch_id")
-        .distinct()
-        .collect()
-    ]
-    tombs = _read_or_none(spark, f"{index_path}/tombstones")
-    committed = (
-        [
-            r["batch_id"]
-            for r in tombs.select("batch_id").distinct().collect()
-        ]
-        if tombs is not None
-        else []
-    )
-    return min([*structural, *committed, 0]) - 1
 
 
 def _erased_docs(tombs: DataFrame) -> DataFrame:
@@ -548,13 +481,6 @@ def _erased_docs(tombs: DataFrame) -> DataFrame:
         .where(F.col("_bal") > 0)
         .select("doc_id")
     )
-
-
-def _erased_ids(tombs: DataFrame) -> set[int]:
-    """Collected form of :func:`_erased_docs` — for the delete path,
-    where the input is already filtered to the request's metadata-sized
-    id list."""
-    return {r["doc_id"] for r in _erased_docs(tombs).collect()}
 
 
 class _ErasureProbe:
@@ -583,9 +509,15 @@ class _ErasureProbe:
         return set(self.balance)
 
     def next_correction_gen(self) -> int:
-        """Same allocation rule as :func:`_next_correction_gen`
-        (orphan corrections deliberately uncounted, so a crashed
-        erasure's re-run overwrites its own partitions in place)."""
+        """The correction generation id: one below every STRUCTURAL
+        generation (stats rows with ``n_docs >= 0`` — the build,
+        folds, and ingests) and every COMMITTED correction (tombstone
+        generations).  An ORPHANED correction — vocab/stats delta
+        partitions whose tombstone (the commit marker, written last)
+        never landed — is deliberately NOT counted: the re-run
+        reallocates the SAME id and dynamic-overwrites the orphan
+        partitions exactly, which is what makes the crashed-erasure
+        re-run converge instead of double-correcting."""
         return min([*self.all_gens, 0]) - 1
 
 
@@ -599,9 +531,9 @@ def _erasure_probe(
     tombstone rows (kind 0 — balance summed driver-side), every
     tombstone generation (kind 2 — committed corrections AND
     resurrection markers, exactly the set
-    :func:`_next_correction_gen` counts), every structural stats
-    generation (kind 3, ``n_docs >= 0``), and — for the upsert replay
-    check — the ids already marked under ``upsert_batch_id``
+    :meth:`_ErasureProbe.next_correction_gen` counts), every structural
+    stats generation (kind 3, ``n_docs >= 0``), and — for the upsert
+    replay check — the ids already marked under ``upsert_batch_id``
     (kind 4).
 
     Every branch is a NARROW projection (no groupBy/distinct): under
@@ -620,7 +552,7 @@ def _erasure_probe(
             nul.alias("b"),
         )
     ]
-    tombs = _read_or_none(spark, f"{index_path}/tombstones")
+    tombs = read_store_or_none(spark, f"{index_path}/tombstones")
     if tombs is not None:
         branches.append(
             tombs.where(F.col("doc_id").isin(ids)).select(
@@ -669,25 +601,25 @@ def _erasure_probe(
     return _ErasureProbe(balance, sorted(all_gens), marked)
 
 
-def _doomed_doclens_rows(
+def _doomed_doclens(
     spark: SparkSession, index_path: str, ids: list[int]
-) -> list:
+) -> DataFrame:
     """The requested ids' doclens rows ``(batch_id, doc_id, dl)`` —
-    one pushed ``doc_id IN`` collect that answers three questions at
-    once (r15): which ids are actually stored (→ the correction's
-    scope), the stats delta (row count + dl sum over the new ids),
-    and which generations the row-erase must touch.  Because doclens
-    is the distinct (doc_id, dl) projection of the postings of the
-    SAME generation (one ``doc_postings`` code path for build, sink
-    and upsert; compaction folds both stores with the same watermark),
-    the doclens generations containing an id equal the postings (and
-    attrs) generations containing it — so this one probe also spares
-    the per-store touched-partition scans in :func:`erase_rows`."""
+    one pushed ``doc_id IN`` probe, collected by the caller, that
+    answers three questions at once (r15): which ids are actually stored
+    (→ the correction's scope), the stats delta (row count + dl sum over
+    the new ids), and which generations the row-erase must touch.
+    Because doclens is the distinct (doc_id, dl) projection of the
+    postings of the SAME generation (one ``doc_postings`` code path for
+    build, sink and upsert; compaction folds both stores with the same
+    watermark), the doclens generations containing an id equal the
+    postings (and attrs) generations containing it — so this one probe
+    also spares the per-store touched-partition scans in
+    :func:`erase_rows`."""
     return (
         spark.read.parquet(f"{index_path}/doclens")
         .where(F.col("doc_id").isin(ids))
         .select("batch_id", "doc_id", "dl")
-        .collect()
     )
 
 
@@ -704,8 +636,6 @@ def _apply_erasure(
     names.  Same write order, same dynamic-overwrite replay contract,
     same correction-generation allocation as always — only the number
     of driver round-trips changed (guide §1.2)."""
-    from .compaction import erase_rows
-
     done = probe.done
     new_set = {i for i in ids if i not in done}
     stored_new = [r for r in drows if r["doc_id"] in new_set]
@@ -734,12 +664,9 @@ def _apply_erasure(
             (correction, "stats"),
             (tomb_rows, "tombstones"),  # commit marker LAST
         ):
-            (
-                rel.withColumn("batch_id", F.lit(int(gen)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{index_path}/{name}")
+            write_generation(
+                rel.withColumn("batch_id", F.lit(int(gen))),
+                f"{index_path}/{name}",
             )
     touched = [(int(g),) for g in sorted({r["batch_id"] for r in drows})]
     if not touched:
@@ -753,7 +680,7 @@ def _apply_erasure(
     # rows leave alongside their postings (delta-shaped — attrs need
     # no df/stats correction, they carry no statistics); attrs rows
     # live in the same generations as their postings (built from them)
-    if _read_or_none(spark, f"{index_path}/attrs") is not None:
+    if read_store_or_none(spark, f"{index_path}/attrs") is not None:
         erase_rows(
             spark, f"{index_path}/attrs", "doc_id", ids, touched=touched
         )
@@ -788,19 +715,29 @@ def delete_docs(
        overwrite cannot express "replace with nothing").
 
     Idempotent: re-running with the same ids finds them tombstoned and
-    nothing stored — it rewrites nothing and returns 0.  Crash
-    contract (the compaction stance — run with the ingest stream
-    stopped, and after a crash RE-RUN THE SAME CALL before probes
-    resume): a crash before the tombstone write leaves orphan delta
-    partitions that the re-run overwrites in place (same generation id
-    — see :func:`_next_correction_gen`), and the half-applied window
-    is probe-detected where cheap (a vocab generation without its
+    nothing stored — it rewrites nothing and returns 0.  Crash contract
+    (the compaction stance — run with the ingest stream stopped, and
+    after a crash RE-RUN THE SAME CALL before probes resume): a crash
+    before the tombstone write leaves orphan delta partitions that the
+    re-run overwrites in place (same generation id — see
+    :meth:`_ErasureProbe.next_correction_gen`), and the half-applied
+    window is probe-detected where cheap (a vocab generation without its
     stats row trips the static probe's coverage guard); a crash after
-    the tombstone but before the row erase leaves corrected-but-
-    present rows, which the re-run erases (ids stay in the erase list
-    even when their correction is committed).  ``compact_text_index``
-    refuses to fold a store whose tombstoned docs still have rows, so
-    a crashed erasure cannot be silently resurrected by compaction.
+    the tombstone but before the row erase leaves corrected-but-present
+    rows, which the re-run erases (ids stay in the erase list even when
+    their correction is committed).  ``compact_text_index`` refuses to
+    fold a store whose tombstoned docs still have rows, so a crashed
+    erasure cannot be silently resurrected by compaction.
+
+    The INGEST sink's crash window is outside this contract: a sink
+    crash after its postings write but before its doclens write leaves
+    a generation whose postings have no doclens rows.  The touched
+    generations and the stats delta come from doclens alone, so an
+    erasure run in that state would leave the doomed docs' postings in
+    that generation and omit them from the correction.  The probes
+    refuse such a generation (no stats row yet), and replaying the
+    crashed batch rewrites all its partitions — replay it before any
+    erasure.
 
     Scale note: ``doc_ids`` is a driver-side list (an erasure request
     is metadata-sized by nature); the rewrite cost is proportional to
@@ -817,7 +754,7 @@ def delete_docs(
     writes in the same commit order."""
     ids = [int(d) for d in doc_ids]
     probe = _erasure_probe(spark, index_path, ids)
-    drows = _doomed_doclens_rows(spark, index_path, ids)
+    drows = _doomed_doclens(spark, index_path, ids).collect()
     return _apply_erasure(spark, index_path, ids, probe, drows)
 
 
@@ -862,7 +799,7 @@ def upsert_docs(
        the store.  Markers are append-only — no tombstone partition
        shrinks outside compaction, so committed correction
        generations can never be mistaken for orphans and reallocated
-       (``_next_correction_gen``'s overwrite-the-orphan contract
+       (``next_correction_gen``'s overwrite-the-orphan contract
        stays sound).
 
     Crash contract (maintenance-window serialization, like every
@@ -898,7 +835,7 @@ def upsert_docs(
     # replay contract: a re-call under the same id IS a replay.)
     if ids and probe.marked_under >= set(ids):
         return 0
-    drows = _doomed_doclens_rows(spark, index_path, ids)
+    drows = _doomed_doclens(spark, index_path, ids).collect()
     # Fail-closed precondition: this op UPDATES (or re-admits) docs
     # the store already knows — a doc with neither index rows nor a
     # tombstone history belongs to the ingest sink.  The restriction
@@ -922,7 +859,7 @@ def upsert_docs(
     # delete_docs has removed the old rows, leaving the upserted docs
     # fully absent and the documented re-run heal failing at the same
     # point forever.  Refuse up front so the old rows stay servable.
-    attrs_store0 = _read_or_none(spark, f"{index_path}/attrs")
+    attrs_store0 = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs_store0 is not None:
         acols = [
             c
@@ -971,12 +908,9 @@ def upsert_docs(
         markers = spark.createDataFrame(
             [(i,) for i in marked], "doc_id bigint"
         )
-        (
-            markers.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/tombstones")
+        write_generation(
+            markers.withColumn("batch_id", F.lit(int(batch_id))),
+            f"{index_path}/tombstones",
         )
     return rewritten
 
@@ -997,11 +931,7 @@ def compact_text_index(
     deleting the tombstones would silently RESURRECT the docs; the fix
     is to re-run the erasure first.  Returns the total number of
     source partitions folded across the two stores."""
-    from py4j.java_gateway import java_import
-
-    from .compaction import compact_generations
-
-    tombs = _read_or_none(spark, f"{index_path}/tombstones")
+    tombs = read_store_or_none(spark, f"{index_path}/tombstones")
     if tombs is not None:
         undead = (
             spark.read.parquet(f"{index_path}/doclens")
@@ -1032,7 +962,7 @@ def compact_text_index(
         data_cols=["doc_id", "dl"],
         dedup_cols=["doc_id"],
     )
-    attrs_store = _read_or_none(spark, f"{index_path}/attrs")
+    attrs_store = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs_store is not None:
         acols = [
             c
@@ -1053,10 +983,7 @@ def compact_text_index(
     _rebuild_vocab(spark, index_path)
     _rebuild_idbloom(spark, index_path)
     if tombs is not None:
-        jvm = spark._jvm
-        java_import(jvm, "org.apache.hadoop.fs.Path")
-        tp = jvm.Path(f"{index_path}/tombstones")
-        tp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(tp, True)
+        delete_path(spark, f"{index_path}/tombstones")
     return n
 
 
@@ -1119,34 +1046,10 @@ def add_doc_attr_column(
     they never read attrs).  Crash windows heal by re-running the
     SAME call (recovery preamble + deterministic stage + idempotent
     marker overwrite).  Single-writer maintenance-window contract."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    conf = spark._jsc.hadoopConfiguration()
-    live_p = jvm.Path(f"{index_path}/attrs")
-    stage = f"{index_path}/attrs.evolve_stage"
-    parked = f"{index_path}/attrs.pre_evolve"
-    stage_p, parked_p = jvm.Path(stage), jvm.Path(parked)
-    fs = live_p.getFileSystem(conf)
-
-    def _rename(src_p, dst_p, why: str) -> None:
-        if not fs.rename(src_p, dst_p):
-            raise RuntimeError(
-                f"add_doc_attr_column: rename {src_p} -> {dst_p} "
-                f"failed ({why}); re-run the same call to recover"
-            )
-
     # recovery preamble FIRST (the refit/evolve crash contract)
-    if fs.exists(parked_p):
-        if not fs.exists(live_p):
-            _rename(parked_p, live_p, "restore parked attrs store")
-        else:
-            fs.delete(parked_p, True)
-    if fs.exists(stage_p):
-        fs.delete(stage_p, True)
+    swap = attrs_swap(spark, index_path, "add_doc_attr_column")
 
-    attrs = _read_or_none(spark, f"{index_path}/attrs")
+    attrs = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs is None:
         raise RuntimeError(
             f"add_doc_attr_column: no attrs store at "
@@ -1168,15 +1071,12 @@ def add_doc_attr_column(
         )
 
     # marker FIRST (see docstring)
-    (
+    write_generation(
         spark.createDataFrame(
             [(len(new_cols), int(batch_id))],
             "n_cols int, batch_id int",
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_path}/attr_evolutions")
+        ),
+        f"{index_path}/attr_evolutions",
     )
 
     tagged = values.withColumn("_present", F.lit(1))
@@ -1208,22 +1108,14 @@ def add_doc_attr_column(
             )
             .write.mode("overwrite")
             .partitionBy("batch_id")
-            .parquet(stage)
+            .parquet(swap.stage_path)
         )
     except Exception:
         # a refused stage must not linger: the live store is
         # untouched and still servable
-        if fs.exists(stage_p):
-            fs.delete(stage_p, True)
+        swap.drop_stage()
         raise
-    _rename(live_p, parked_p, "park old attrs store")
-    _rename(stage_p, live_p, "install widened attrs store")
-    if not fs.exists(live_p):
-        raise RuntimeError(
-            f"add_doc_attr_column: widened attrs store did not land "
-            f"at {index_path}/attrs; parked copy kept at {parked}"
-        )
-    fs.delete(parked_p, True)
+    swap.commit()
 
 
 def drop_doc_attr_column(
@@ -1242,33 +1134,9 @@ def drop_doc_attr_column(
     stay exact, and a probe on the dropped column fails loudly
     (unresolved column) — the silent-history problem cannot occur.
     Single-writer maintenance-window contract."""
-    from py4j.java_gateway import java_import
+    swap = attrs_swap(spark, index_path, "drop_doc_attr_column")
 
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.Path(index_path).getFileSystem(conf)
-
-    def _rename(src_p, dst_p, why: str) -> None:
-        if not fs.rename(src_p, dst_p):
-            raise RuntimeError(
-                f"drop_doc_attr_column: rename {src_p} -> {dst_p} "
-                f"failed ({why}); re-run the same call to recover"
-            )
-
-    live_p = jvm.Path(f"{index_path}/attrs")
-    stage = f"{index_path}/attrs.evolve_stage"
-    parked = f"{index_path}/attrs.pre_evolve"
-    stage_p, park_p = jvm.Path(stage), jvm.Path(parked)
-    if fs.exists(park_p):
-        if not fs.exists(live_p):
-            _rename(park_p, live_p, "restore parked attrs store")
-        else:
-            fs.delete(park_p, True)
-    if fs.exists(stage_p):
-        fs.delete(stage_p, True)
-
-    attrs = _read_or_none(spark, f"{index_path}/attrs")
+    attrs = read_store_or_none(spark, f"{index_path}/attrs")
     if attrs is None:
         raise RuntimeError(
             f"drop_doc_attr_column: no attrs store at "
@@ -1307,14 +1175,7 @@ def drop_doc_attr_column(
         attrs.select("tok", "doc_id", "batch_id", *remaining)
         .write.mode("overwrite")
         .partitionBy("batch_id")
-        .parquet(stage)
+        .parquet(swap.stage_path)
     )
-    _rename(live_p, park_p, "park old attrs store")
-    _rename(stage_p, live_p, "install new attrs store")
-    if not fs.exists(live_p):
-        raise RuntimeError(
-            f"drop_doc_attr_column: new attrs store did not land at "
-            f"{index_path}/attrs; parked copy kept at {parked}"
-        )
-    fs.delete(park_p, True)
+    swap.commit()
     return True

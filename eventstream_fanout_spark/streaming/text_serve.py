@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.text_index import bm25_batch_topk
+from .compaction import write_generation
 
 
 def streaming_bm25_probe_sink(
@@ -54,12 +55,9 @@ def streaming_bm25_probe_sink(
             k,
             max_df_frac=max_df_frac,
         )
-        (
-            topk.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        write_generation(
+            topk.withColumn("batch_id", F.lit(int(batch_id))),
+            out_path,
         )
 
     return process

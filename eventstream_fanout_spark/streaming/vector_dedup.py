@@ -47,8 +47,8 @@ from ..operators.ann_index import (
     l2q,
     pq_subspaces,
 )
-from .ann_ingest import _read_artifact_or_raise
-from .corpus_dedup import _read_store_or_none
+from .ann_ingest import read_quantizer
+from .compaction import read_store_or_none, write_generation
 
 
 def _query_tables(batch: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -166,22 +166,15 @@ def streaming_vector_dedup_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        codebook = _read_artifact_or_raise(
-            spark, f"{index_path}/codebook", "PQ codebook"
-        )
-        centroids = _read_artifact_or_raise(
-            spark, f"{index_path}/centroids", "IVF centroids"
-        )
+        codebook, centroids = read_quantizer(spark, index_path)
         # the quantizer artifacts are REQUIRED (fail-closed above), but
         # the CODES store may not exist yet: a quantizer-only index
         # (build_pq_quantizer) is the legitimate starting state of a
         # dedup-gated ingest — the first admitted batch founds it.
-        # _read_store_or_none distinguishes PATH_NOT_FOUND (empty
+        # read_store_or_none distinguishes PATH_NOT_FOUND (empty
         # store) from any other analysis failure (corrupt store —
         # propagate, or the gate would silently admit duplicates).
-        raw = _read_store_or_none(
-            spark, f"{index_path}/codes", exclude_batch_id=int(batch_id)
-        )
+        raw = read_store_or_none(spark, f"{index_path}/codes", batch_id)
         store = (
             spark.createDataFrame([], CODES_SCHEMA)
             if raw is None
@@ -191,12 +184,8 @@ def streaming_vector_dedup_sink(
             batch_df, store, codebook, centroids, max_adc_dist,
             nprobe=nprobe,
         )
-        (
-            survivors.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        write_generation(
+            survivors.withColumn("batch_id", F.lit(int(batch_id))), out_path
         )
         # codes derive from the just-written survivors partition (the
         # graph/text read-back discipline, r14): PQ encoding is a pure
@@ -222,13 +211,13 @@ def streaming_vector_dedup_sink(
             .where(F.col("batch_id") == int(batch_id))
             .select("vec_id", "embedding")
         )
-        (
-            encode_pq_codes(admitted, codebook, centroids)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(f"{index_path}/codes")
+        write_generation(
+            encode_pq_codes(admitted, codebook, centroids).withColumn(
+                "batch_id", F.lit(int(batch_id))
+            ),
+            f"{index_path}/codes",
+            "batch_id",
+            "list_id",
         )
 
     return process

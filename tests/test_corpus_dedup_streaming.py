@@ -102,74 +102,6 @@ def test_dedup_against_store_is_band_local(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bucketed_store_semantics_match_and_scan_is_shuffle_free(
-    spark, tmp_path
-):
-    """The bucketed-store variant must admit exactly the same docs as
-    the parquet-path variant (two batches + replay), and the store
-    side of the rejection join must read its buckets with no Exchange
-    above the scan (the shuffle-free steady-state path)."""
-    import uuid
-
-    from eventstream_fanout_spark.streaming.corpus_dedup import (
-        store_rejection_join,
-        streaming_dedup_sink_bucketed,
-    )
-
-    table = f"sig_store_{uuid.uuid4().hex[:8]}"
-    out = str(tmp_path / "clean_b")
-    texts = _corpus_texts(spark, 6)
-    b0 = _docs(
-        spark,
-        [
-            (0, texts[0][1]),
-            (1, texts[1][1]),
-            (2, texts[2][1]),
-            (100, texts[0][1]),  # within-batch dup
-        ],
-    )
-    b1 = _docs(
-        spark,
-        [
-            (10, texts[4][1]),
-            (11, texts[1][1]),  # dup of accepted doc 1
-        ],
-    )
-    sink = streaming_dedup_sink_bucketed(table, out)
-    try:
-        sink(b0, 0)
-        sink(b1, 1)
-        admitted = {
-            r["doc_id"]: r["batch_id"]
-            for r in spark.read.parquet(out).collect()
-        }
-        assert admitted == {0: 0, 1: 0, 2: 0, 10: 1}
-
-        # replay batch 1 from the same "checkpoint": unchanged
-        sink(b1, 1)
-        assert {
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        } == {0, 1, 2, 10}
-        # store holds bands for exactly the admitted docs
-        stored = {
-            r["doc_id"]
-            for r in spark.table(table).select("doc_id").distinct().collect()
-        }
-        assert stored == {0, 1, 2, 10}
-
-        # plan shape: the bucketed store side scans its buckets in
-        # place — no Exchange between its FileScan and the join
-        plan = (
-            store_rejection_join(spark, table, b1)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan, plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_incremental_dedup_as_real_stream(spark, tmp_path):
     """The dedup sink composed through start_fanout as an ACTUAL
     Structured Streaming query: two doc files drained as separate
@@ -244,15 +176,18 @@ def test_incremental_dedup_as_real_stream(spark, tmp_path):
 
 
 def test_store_compaction_preserves_semantics_and_replay(spark, tmp_path):
-    """Folding committed batch partitions into the frozen partition
-    must keep the band content identical, keep rejecting dups of
-    compacted batches, and keep replay of the newest (uncompacted)
-    batch safe."""
-    from eventstream_fanout_spark.streaming.corpus_dedup import (
-        accepted_bands,
-        compact_store,
-        streaming_dedup_sink,
+    """Folding the signature store's committed batch partitions into
+    the frozen partition (the shared compact_generations) must keep
+    the band content identical, keep rejecting dups of compacted
+    batches, and keep replay of the newest (uncompacted) batch safe."""
+    from eventstream_fanout_spark.streaming.compaction import (
+        compact_generations,
     )
+
+    def compact_store(spark, store, upto_batch_id):
+        return compact_generations(
+            spark, store, upto_batch_id, data_cols=["doc_id", "band", "bh"]
+        )
 
     store = str(tmp_path / "store")
     out = str(tmp_path / "clean")
@@ -292,76 +227,6 @@ def test_store_compaction_preserves_semantics_and_replay(spark, tmp_path):
 
     # compacting again with nothing below the watermark is a no-op
     assert compact_store(spark, store, upto_batch_id=2) == 0
-
-
-def test_bucketed_store_compaction_preserves_semantics_and_replay(
-    spark, tmp_path
-):
-    """compact_store_table (round-5, VERDICT r4 item 6): folding the
-    bucketed table's committed batch partitions into the frozen
-    partition must keep band content identical, keep the store-side
-    bucket scan shuffle-free, keep rejecting dups of compacted batches,
-    and keep replay of the newest (uncompacted) batch safe."""
-    import uuid
-
-    from eventstream_fanout_spark.streaming.corpus_dedup import (
-        compact_store_table,
-        store_rejection_join,
-        streaming_dedup_sink_bucketed,
-    )
-
-    table = f"sig_store_{uuid.uuid4().hex[:8]}"
-    out = str(tmp_path / "clean_bc")
-    texts = _corpus_texts(spark, 6)
-    sink = streaming_dedup_sink_bucketed(table, out)
-    try:
-        sink(_docs(spark, [(0, texts[0][1]), (1, texts[1][1])]), 0)
-        sink(_docs(spark, [(10, texts[2][1])]), 1)
-        sink(_docs(spark, [(20, texts[3][1])]), 2)
-
-        before = {
-            (r["doc_id"], r["band"], r["bh"])
-            for r in spark.table(table).select("doc_id", "band", "bh").collect()
-        }
-        folded = compact_store_table(spark, table, upto_batch_id=2)
-        assert folded == 2  # batches 0 and 1
-        after = {
-            (r["doc_id"], r["band"], r["bh"])
-            for r in spark.table(table).select("doc_id", "band", "bh").collect()
-        }
-        assert after == before  # content identical
-        bids = {
-            r["batch_id"]
-            for r in spark.table(table).select("batch_id").distinct().collect()
-        }
-        assert bids == {-1, 2}  # 0/1 folded into frozen, 2 untouched
-
-        # the frozen generation still scans its buckets in place
-        plan = (
-            store_rejection_join(
-                spark, table, _docs(spark, [(99, texts[5][1])])
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan, plan
-
-        # dups of a COMPACTED batch's doc still reject
-        sink(_docs(spark, [(30, texts[4][1]), (31, texts[0][1])]), 3)
-        admitted = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-        assert admitted == {0, 1, 10, 20, 30}
-
-        # replay of batch 2 (uncompacted) is still masked correctly
-        sink(_docs(spark, [(20, texts[3][1])]), 2)
-        assert {
-            r["doc_id"] for r in spark.read.parquet(out).collect()
-        } == {0, 1, 10, 20, 30}
-
-        # compacting again with nothing below the watermark is a no-op
-        assert compact_store_table(spark, table, upto_batch_id=2) == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_crash_between_survivor_and_signature_writes_heals_on_replay(
@@ -620,57 +485,6 @@ def test_verified_sink_enforces_unique_doc_id_contract(spark, tmp_path):
         sink(_docs(spark, [(0, texts[0][1])]), 1)
 
 
-def test_bucketed_verified_candidates_ride_the_buckets(spark, tmp_path):
-    """ADVICE r5: verified-mode candidate generation against the
-    bucketed store must join through band_key so the store side scans
-    its buckets with no Exchange — and the bucketed verified sink must
-    admit the same docs as the parquet-path verified sink."""
-    import uuid
-
-    from eventstream_fanout_spark.streaming.corpus_dedup import (
-        store_candidate_join,
-        streaming_dedup_sink,
-        streaming_dedup_sink_bucketed,
-    )
-
-    table = f"sig_store_v_{uuid.uuid4().hex[:8]}"
-    texts = _corpus_texts(spark, 4)
-    b0 = _docs(spark, [(0, texts[0][1]), (1, texts[1][1])])
-    b1 = _docs(spark, [(10, texts[2][1]), (11, texts[0][1])])  # 11 dup of 0
-    out_p = str(tmp_path / "out_p")
-    out_b = str(tmp_path / "out_b")
-    sink_p = streaming_dedup_sink(
-        str(tmp_path / "store_p"), out_p, min_jaccard=0.3
-    )
-    sink_b = streaming_dedup_sink_bucketed(
-        table, out_b, min_jaccard=0.3
-    )
-    try:
-        for sink in (sink_p, sink_b):
-            sink(b0, 0)
-            sink(b1, 1)
-        admitted_p = {
-            r["doc_id"] for r in spark.read.parquet(out_p).collect()
-        }
-        admitted_b = {
-            r["doc_id"] for r in spark.read.parquet(out_b).collect()
-        }
-        assert admitted_p == admitted_b == {0, 1, 10}
-
-        # plan shape: the store side of the candidate join reads its
-        # buckets in place (bucket pruning marker, same assertion as
-        # the rejection-join test)
-        plan = (
-            store_candidate_join(spark, table, b1)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan, plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_store_reader_reraises_non_missing_path_failures(spark, tmp_path):
     """Only PATH_NOT_FOUND may mean 'empty store'.  A store path that
     EXISTS but cannot be read as parquet (here: schema inference fails
@@ -698,9 +512,9 @@ def test_compaction_refuses_ignore_missing_files(spark, tmp_path):
     the post-fold deletes would silently scan a partial store."""
     import pytest
 
-    from eventstream_fanout_spark.streaming.corpus_dedup import (
-        compact_store,
-        compact_store_table,
+    from eventstream_fanout_spark.streaming.compaction import (
+        compact_generations,
+        compact_table_manifest,
     )
 
     key = "spark.sql.files.ignoreMissingFiles"
@@ -708,9 +522,13 @@ def test_compaction_refuses_ignore_missing_files(spark, tmp_path):
     spark.conf.set(key, "true")
     try:
         with pytest.raises(RuntimeError, match="ignoreMissingFiles"):
-            compact_store(spark, str(tmp_path / "s"), upto_batch_id=1)
+            compact_generations(
+                spark, str(tmp_path / "s"), 1, data_cols=["doc_id"]
+            )
         with pytest.raises(RuntimeError, match="ignoreMissingFiles"):
-            compact_store_table(spark, "any_table", upto_batch_id=1)
+            compact_table_manifest(
+                spark, "any_table", str(tmp_path / "m"), 1, lambda df: df
+            )
     finally:
         spark.conf.set(key, prev)
 

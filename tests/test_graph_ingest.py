@@ -338,12 +338,24 @@ def test_graph_autocompact_sink_bounds_and_skips(spark, tmp_path):
     postings once the live count hits the bound, a replayed trigger
     below the watermark skips (nodes/edges/rank gens already durable),
     and later refreshes compose on the frozen base."""
+    from eventstream_fanout_spark.streaming.compaction import (
+        live_batch_ids,
+        manifest_watermark,
+    )
     from eventstream_fanout_spark.streaming.graph_ingest import (
-        _postings_watermark,
         graph_ingest_sink,
-        live_posting_ids,
+        postings_manifest_path,
+        postings_table_name,
         read_rank_generations,
     )
+
+    def _postings_watermark(spark, path):
+        return manifest_watermark(spark, postings_manifest_path(path))
+
+    def live_posting_ids(spark, path):
+        return live_batch_ids(
+            spark, postings_table_name(path), postings_manifest_path(path)
+        )
 
     path = str(tmp_path / "gstore_ac")
     sink = graph_ingest_sink(path, max_live_parts=2)

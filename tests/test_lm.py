@@ -511,13 +511,26 @@ class TestLmStoreCompaction:
         whose groups fell below the watermark SKIPS them (idempotent
         outcome — the deltas are durable inside the frozen gen), and
         serving stays exactly refit-equal throughout."""
+        from eventstream_fanout_spark.streaming.compaction import (
+            live_batch_ids,
+            manifest_watermark,
+        )
         from eventstream_fanout_spark.streaming.lm_store import (
-            _lm_watermark,
             lm_ingest_sink,
+            lm_manifest_path,
             lm_table_name,
-            live_delta_ids,
             serve_bigram_counts,
         )
+
+        def _lm_watermark(spark, root, kind):
+            return manifest_watermark(spark, lm_manifest_path(root, kind))
+
+        def live_delta_ids(spark, root):
+            return live_batch_ids(
+                spark,
+                lm_table_name(root, "bigrams"),
+                lm_manifest_path(root, "bigrams"),
+            )
 
         docs = spark.createDataFrame(
             [

@@ -564,6 +564,29 @@ def test_fanout_partial_sink_failure_recovers_without_duplicates(
     assert out.select("event_id").distinct().count() == 6
 
 
+def test_fanout_input_rows_match_lines_read(spark, tmp_path):
+    """A non-empty trigger reports ``numInputRows`` equal to the lines
+    it read: the callback's emptiness check runs on the persisted
+    frame the sinks consume, so it does not re-read the source and
+    count its rows a second time."""
+    src = tmp_path / "lines"
+    src.mkdir()
+    (src / "part-0.json").write_text(
+        "".join(json.dumps({"value": f"line {i}"}) + "\n" for i in range(100))
+    )
+    q = start_fanout(
+        json_file_stream(spark, str(src)),
+        [parquet_sink(str(tmp_path / "warehouse"))],
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        query_name="fanout_input_rows",
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert [p["numInputRows"] for p in progress] == [100]
+    assert spark.read.parquet(str(tmp_path / "warehouse")).count() == 100
+
+
 def test_micro_batch_latency_within_reference_budget(spark, tmp_path):
     """The reference's only quantitative target: enrichment visible
     within 5 s of insert (reference README.md:99).  Drive the full

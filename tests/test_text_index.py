@@ -249,6 +249,39 @@ def test_ingest_sink_refuses_reused_doc_id(spark, tmp_path):
     sink(odd, 1)  # replay of batch 1 does not clash with itself
 
 
+def test_ingest_sink_accepts_int_doc_ids_against_long_store(
+    spark, tmp_path
+):
+    """The uniqueness gate reads doclens as the store's LongType: over
+    a build_text_index store, a ``doc_id int`` batch of fresh ids
+    ingests as the store's type (and the store stays probe-able), and
+    an ``int`` batch that repeats a stored id raises the contract's
+    error."""
+    from eventstream_fanout_spark.operators.text_index import (
+        bm25_topk_merged,
+    )
+    from eventstream_fanout_spark.streaming.text_ingest import (
+        streaming_text_index_sink,
+    )
+
+    docs = _docs(spark)
+    path = str(tmp_path / "tidx")
+    build_text_index(spark, docs.where(F.col("doc_id") % 2 == 0), path)
+    sink = streaming_text_index_sink(path)
+    as_int = lambda df: df.select(  # noqa: E731
+        F.col("doc_id").cast("int").alias("doc_id"), "text"
+    )
+    sink(as_int(docs.where(F.col("doc_id") % 2 == 1)), 1)
+    assert spark.read.parquet(f"{path}/doclens").count() == docs.count()
+    for table in ("postings", "doclens"):
+        gen = spark.read.parquet(f"{path}/{table}/batch_id=1")
+        assert gen.schema["doc_id"].dataType.typeName() == "long"
+    assert bm25_topk_merged(spark, path, TERMS, 10).count() == 10
+
+    with pytest.raises(RuntimeError, match="re-sends doc_id"):
+        sink(as_int(docs.where(F.col("doc_id") == 2)), 2)
+
+
 def test_merged_probe_refuses_duplicated_generation_doc(spark, tmp_path):
     """A doc_id present in two index generations (a crashed compaction
     mid-fold, or an ingest that bypassed the uniqueness gate) silently
@@ -652,17 +685,41 @@ def _file_census(root):
     return out
 
 
-def test_delete_docs_runs_no_full_store_maintenance(spark, tmp_path):
+def _hook_generation_writer(monkeypatch, written, fail_on=None):
+    """Route text_ingest's shared generation writer through a recorder:
+    every ``(table, df)`` it writes is appended to ``written``, and a
+    write to the ``fail_on`` table raises instead (a crash at that
+    point of the production write order)."""
+    from eventstream_fanout_spark.streaming import text_ingest
+
+    real = text_ingest.write_generation
+
+    def write(df, path, *cols):
+        table = path.rsplit("/", 1)[1]
+        if table == fail_on:
+            raise RuntimeError(f"simulated crash before the {table} write")
+        written.append((table, df))
+        real(df, path, *cols)
+
+    monkeypatch.setattr(text_ingest, "write_generation", write)
+
+
+def test_delete_docs_runs_no_full_store_maintenance(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r7 item 3: an erasure must not re-aggregate the full
     postings/doclens stores — proven two ways: (a) file-level
     invariance — every pre-existing vocab/stats file survives a
     delete_docs byte-for-byte (a full rebuild would rewrite them all);
     the only new files are the correction generation's partitions and
     the untouched-generation postings/doclens files also survive;
-    (b) the production delta plans carry a pushed doc_id IN predicate
-    into the parquet scans (the doomed rows are the only input)."""
+    (b) the relations delete_docs actually writes carry a pushed doc_id
+    IN predicate into their parquet scans (the vocab delta), or read no
+    store at all (the stats correction and tombstone rows are built
+    from the doclens probe, itself a pushed doc_id IN scan) — the
+    doomed rows are the only input."""
     from eventstream_fanout_spark.streaming.text_ingest import (
-        _erasure_deltas,
+        _doomed_doclens,
         delete_docs,
         streaming_text_index_sink,
     )
@@ -674,17 +731,26 @@ def test_delete_docs_runs_no_full_store_maintenance(spark, tmp_path):
     sink(docs.where(F.col("doc_id") >= 400), 1)
 
     doomed = [401, 403, 405]
-    # (b) plan shape of the actual delta relations
-    vocab_delta, stats_delta, tombs = _erasure_deltas(spark, path, doomed)
-    for rel in (vocab_delta, stats_delta, tombs):
-        plan = rel._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters: [In(doc_id" in plan, plan
-
     before = {
         name: _file_census(f"{path}/{name}") for name in ("vocab", "stats")
     }
     frozen_postings = _file_census(f"{path}/postings/batch_id=-1")
+    written = []
+    _hook_generation_writer(monkeypatch, written)
     assert delete_docs(spark, path, doomed) > 0
+
+    # (b) plan shape of the relations the erasure wrote
+    plans = {
+        table: df._jdf.queryExecution().executedPlan().toString()
+        for table, df in written
+    }
+    assert sorted(plans) == ["stats", "tombstones", "vocab"]
+    assert "PushedFilters: [In(doc_id" in plans["vocab"], plans["vocab"]
+    for table in ("stats", "tombstones"):
+        assert "FileScan" not in plans[table], plans[table]
+    probe = _doomed_doclens(spark, path, doomed)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [In(doc_id" in plan, plan
 
     # (a) nothing pre-existing was rewritten; the correction generation
     # is purely additive
@@ -700,21 +766,30 @@ def test_delete_docs_runs_no_full_store_maintenance(spark, tmp_path):
     assert _file_census(f"{path}/tombstones")  # commit marker landed
 
 
-def test_crashed_erasure_recovers_and_fails_closed(spark, tmp_path):
+def _generations(spark, table_path):
+    return {
+        r["batch_id"]
+        for r in spark.read.parquet(table_path)
+        .select("batch_id")
+        .distinct()
+        .collect()
+    }
+
+
+def test_crashed_erasure_recovers_and_fails_closed(
+    spark, tmp_path, monkeypatch
+):
     """Crash window between the erasure's vocab-delta write and its
-    stats-correction write: the static probe must fail closed (vocab
-    generation without a stats row), and re-running the SAME
+    stats-correction write (delete_docs itself, its generation writer
+    failing on the stats write): the static probe must fail closed
+    (vocab generation without a stats row), and re-running the SAME
     delete_docs call must converge — the orphan partition is
     overwritten in place (same correction generation id), after which
     the probe equals an index that never contained the docs."""
     from eventstream_fanout_spark.operators.text_index import (
         bm25_topk_merged,
     )
-    from eventstream_fanout_spark.streaming.text_ingest import (
-        _erasure_deltas,
-        _next_correction_gen,
-        delete_docs,
-    )
+    from eventstream_fanout_spark.streaming.text_ingest import delete_docs
 
     docs = _docs(spark)
     path = str(tmp_path / "tidx")
@@ -725,29 +800,25 @@ def test_crashed_erasure_recovers_and_fails_closed(spark, tmp_path):
         .select("doc_id")
         .collect()
     ]
-    # simulate the crash: only the vocab delta landed
-    gen = _next_correction_gen(spark, path)
-    vocab_delta, _sd, _t = _erasure_deltas(spark, path, doomed)
-    (
-        vocab_delta.withColumn("batch_id", F.lit(int(gen)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path}/vocab")
-    )
+    # the crash: only the vocab delta landed
+    written = []
+    _hook_generation_writer(monkeypatch, written, fail_on="stats")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        delete_docs(spark, path, doomed)
+    monkeypatch.undo()
+    assert [t for t, _df in written] == ["vocab"]
+    orphan = _generations(spark, f"{path}/vocab") - {-1}
+    assert len(orphan) == 1
+    (gen,) = orphan
+    assert gen < -1
+    assert _generations(spark, f"{path}/stats") == {-1}
     with pytest.raises(Exception, match="no stats row"):
         bm25_topk(spark, path, TERMS, 10).collect()
 
     # re-run heals: same generation id reused, correction committed
     assert delete_docs(spark, path, doomed) > 0
-    gens = {
-        r["batch_id"]
-        for r in spark.read.parquet(f"{path}/vocab")
-        .select("batch_id")
-        .distinct()
-        .collect()
-    }
-    assert gens == {-1, gen}
+    assert _generations(spark, f"{path}/vocab") == {-1, gen}
+    assert _generations(spark, f"{path}/stats") == {-1, gen}
 
     fresh = str(tmp_path / "tidx_fresh")
     build_text_index(spark, docs.where(~F.col("doc_id").isin(doomed)), fresh)
@@ -1457,7 +1528,7 @@ def test_text_attr_guards_fail_closed(spark, tmp_path):
 
 
 def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """VERDICT r9 'What's wrong' item 2 (the last silent crash
     window): a delete_docs crash AFTER its stats-correction write but
@@ -1465,15 +1536,15 @@ def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
     the doomed postings still score — previously undetected (the
     correction generation HAS its stats row and no postings).  The
     correction-commit guard must now raise through the merged AND
-    static probes, and re-running the same delete_docs heals."""
+    static probes, and re-running the same delete_docs heals.  The
+    crash is injected into delete_docs itself: its generation writer
+    fails on the tombstone write."""
+    import os
+
     from eventstream_fanout_spark.operators.text_index import (
         bm25_topk_merged,
     )
-    from eventstream_fanout_spark.streaming.text_ingest import (
-        _erasure_deltas,
-        _next_correction_gen,
-        delete_docs,
-    )
+    from eventstream_fanout_spark.streaming.text_ingest import delete_docs
 
     docs = _docs(spark)
     path = str(tmp_path / "tidx")
@@ -1484,23 +1555,18 @@ def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
         .select("doc_id")
         .collect()
     ]
-    # simulate the crash: vocab delta AND stats correction landed,
-    # tombstone (the commit marker, written last) did not
-    gen = _next_correction_gen(spark, path)
-    vocab_delta, stats_delta, _t = _erasure_deltas(spark, path, doomed)
-    sd = stats_delta.collect()[0]
-    correction = spark.createDataFrame(
-        [(int(sd["n_docs"]), int(sd["total_len"]))],
-        "n_docs bigint, total_len bigint",
-    )
-    for rel, name in ((vocab_delta, "vocab"), (correction, "stats")):
-        (
-            rel.withColumn("batch_id", F.lit(int(gen)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{path}/{name}")
-        )
+    # the crash: vocab delta AND stats correction landed, tombstone
+    # (the commit marker, written last) did not
+    written = []
+    _hook_generation_writer(monkeypatch, written, fail_on="tombstones")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        delete_docs(spark, path, doomed)
+    monkeypatch.undo()
+    assert [t for t, _df in written] == ["vocab", "stats"]
+    gens = _generations(spark, f"{path}/stats")
+    assert len(gens - {-1}) == 1
+    assert _generations(spark, f"{path}/vocab") == gens
+    assert not os.path.exists(f"{path}/tombstones")
     for probe in (bm25_topk, bm25_topk_merged):
         with pytest.raises(Exception, match="no tombstone commit"):
             probe(spark, path, TERMS, 10).collect()
