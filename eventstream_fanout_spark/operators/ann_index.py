@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.guards import guard_branch, guard_rider
 from ..streaming.compaction import write_generation
 from .similarity import ivf_assign, ivf_centroids
 
@@ -286,78 +287,77 @@ def _manifest_rows(rows: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
+# Columns of a single probe's scored relation and of a batch probe's;
+# every guard branch is shaped to one of them.
+_SINGLE = (("vec_id", "long"), ("list_id", "long"), ("adc_dist", "bigint"))
+_BATCH = (("qid", "long"), ("vec_id", "long"), ("adc_dist", "bigint"))
+
+_ATTRS_STALE = (
+    " stored code row(s) in the probed lists have "
+    "no attrs row — the attr store is stale (a "
+    "streamed ingest or upsert_vectors landed "
+    "since it was built) and a filtered probe "
+    "would silently drop those vectors; re-run "
+    "build_attr_store"
+)
+_BATCH_ATTRS_STALE = (
+    " stored code row(s) in the probed lists have "
+    "no attrs row — the attr store is stale (an "
+    "out-of-band write bypassed the delta-"
+    "maintaining sinks) and a filtered batch probe "
+    "would silently drop those vectors; re-run "
+    "build_attr_store"
+)
+
+
 def _codebook_guard(
-    codebook: DataFrame,
-    fields: tuple[tuple[str, str], ...] = (
-        ("vec_id", "long"),
-        ("list_id", "long"),
-        ("adc_dist", "bigint"),
-    ),
+    codebook: DataFrame, fields: tuple[tuple[str, str], ...] = _SINGLE
 ) -> DataFrame:
-    """Lazy 0-row assert_true branch (ivf_topk pattern): the stored
-    codebook must hold exactly PQ_SUBS x 8 entries or the probe raises
-    at execution instead of returning a silently empty/garbage top-k.
-    Output columns (``fields`` = (name, type) pairs matching the
-    caller's schema) are cast FROM the assert column (non-foldable) so
-    a downstream join's pushed-down isnotnull filter cannot
-    constant-fold the branch away."""
+    """Guard branch: the stored codebook must hold exactly PQ_SUBS x 8
+    entries or the probe raises at execution instead of returning a
+    silently empty/garbage top-k."""
     expected = PQ_SUBS * 8
-    ncent = codebook.agg(F.count(F.lit(1)).cast("int").alias("_ncent"))
-    return (
-        ncent.select(
-            F.assert_true(
-                F.col("_ncent") == expected,
-                F.concat(
-                    F.lit("persisted PQ codebook has "),
-                    F.col("_ncent").cast("string"),
-                    F.lit(
-                        f" entries, expected {expected} — the index "
-                        "artifact is broken or was built from a corpus "
-                        "lacking the seed vec_ids; rebuild before probing"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(
-            *[F.col("_a").cast(t).alias(n) for n, t in fields]
-        )
+    return guard_branch(
+        codebook.agg(F.count(F.lit(1)).cast("int").alias("_ncent")),
+        F.col("_ncent") == expected,
+        F.concat(
+            F.lit("persisted PQ codebook has "),
+            F.col("_ncent").cast("string"),
+            F.lit(
+                f" entries, expected {expected} — the index "
+                "artifact is broken or was built from a corpus "
+                "lacking the seed vec_ids; rebuild before probing"
+            ),
+        ),
+        fields,
     )
 
 
 def _adc_sum_with_row_guard() -> F.Column:
     """``adc_dist`` from the ``(_sum, _n)`` aggregate, with the
-    generation-uniqueness contract enforced in-row: every vector must
-    contribute exactly PQ_SUBS code rows to its ADC sum.  A vec_id
-    present in TWO index generations (a re-ingested vector violating
-    the unique-vector contract, or a probe racing a crashed
-    compaction) would silently DOUBLE its summed distance and sink in
-    the ranking — raise instead.  The assert rides the sum expression
-    itself (``_sum + coalesce(cast(assert_true(...)), 0)`` — always
-    +0 when healthy, non-foldable so the optimizer cannot prune it,
-    and no extra aggregate or job: the count shares the existing
-    groupBy."""
-    return (
-        F.col("_sum")
-        + F.coalesce(
-            F.assert_true(
-                F.col("_n") == F.lit(PQ_SUBS),
-                F.concat(
-                    F.lit("ANN index probe: vec_id "),
-                    F.col("vec_id").cast("string"),
-                    F.lit(" has "),
-                    F.col("_n").cast("string"),
-                    F.lit(
-                        f" code rows, expected {PQ_SUBS} — the vector "
-                        "exists in multiple index generations "
-                        "(re-ingested id or crashed compaction); "
-                        "re-run compact_index before probing"
-                    ),
-                ),
-            ).cast("bigint"),
-            F.lit(0).cast("bigint"),
-        )
-    ).cast("bigint")
+    generation-uniqueness contract riding the sum: every vector must
+    contribute exactly PQ_SUBS code rows.  A vec_id present in TWO
+    index generations (a re-ingested vector violating the
+    unique-vector contract, or a probe racing a crashed compaction)
+    would silently DOUBLE its summed distance and sink in the ranking
+    — raise instead.  The count shares the existing groupBy."""
+    return guard_rider(
+        F.col("_sum"),
+        F.col("_n") == F.lit(PQ_SUBS),
+        F.concat(
+            F.lit("ANN index probe: vec_id "),
+            F.col("vec_id").cast("string"),
+            F.lit(" has "),
+            F.col("_n").cast("string"),
+            F.lit(
+                f" code rows, expected {PQ_SUBS} — the vector "
+                "exists in multiple index generations "
+                "(re-ingested id or crashed compaction); "
+                "re-run compact_index before probing"
+            ),
+        ),
+        "bigint",
+    )
 
 
 def adc_scores_from_index(
@@ -425,44 +425,29 @@ def batch_probe_lists(
     )
 
 
-def _batch_filtered_restrict(
-    codes: DataFrame, attrs: DataFrame, attr_pred: F.Column
+def _attrs_restrict(
+    codes: DataFrame,
+    attrs: DataFrame,
+    attr_pred: F.Column,
+    message: str,
+    fields: tuple[tuple[str, str], ...],
 ) -> tuple[DataFrame, DataFrame]:
-    """(restricted_codes, coverage_guard) for the batch filtered probe:
-    codes semi-joined to the attr-allowed vec_ids, plus the 0-row lazy
-    branch raising when any code row in the (already list-pruned)
-    relation has no attrs twin — the same fail-closed stance as
-    ``pq_filtered_topk``, shaped for the batch plan's
-    (qid, vec_id, adc_dist) columns."""
+    """(restricted codes, coverage guard): ``codes`` semi-joined to the
+    attr-allowed vec_ids, plus the guard branch raising when any code
+    row in the (already list-pruned) relation has no attrs twin — a
+    vec_id-only projection of the same pruned attrs scan, so the check
+    costs touched lists, not corpus."""
     allowed = attrs.where(attr_pred).select("vec_id")
     uncovered = (
         codes.select("vec_id")
         .join(attrs.select("vec_id"), "vec_id", "left_anti")
         .agg(F.count(F.lit(1)).cast("long").alias("_nu"))
     )
-    guard = (
-        uncovered.select(
-            F.assert_true(
-                F.col("_nu") == 0,
-                F.concat(
-                    F.col("_nu").cast("string"),
-                    F.lit(
-                        " stored code row(s) in the probed lists have "
-                        "no attrs row — the attr store is stale (an "
-                        "out-of-band write bypassed the delta-"
-                        "maintaining sinks) and a filtered batch probe "
-                        "would silently drop those vectors; re-run "
-                        "build_attr_store"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(
-            F.col("_a").cast("long").alias("qid"),
-            F.col("_a").cast("long").alias("vec_id"),
-            F.col("_a").cast("bigint").alias("adc_dist"),
-        )
+    guard = guard_branch(
+        uncovered,
+        F.col("_nu") == 0,
+        F.concat(F.col("_nu").cast("string"), F.lit(message)),
+        fields,
     )
     return codes.join(allowed, "vec_id", "left_semi"), guard
 
@@ -489,20 +474,15 @@ def pq_batch_probe_topk(
     the codes scan on its ``list_id`` PARTITION column, so the scan
     prunes to the union of touched lists (dynamic partition pruning —
     plan pinned by tests/test_ann_index.py) and per-batch cost is
-    |touched lists' codes|, not |corpus| — at 100 TB this was the
-    serving path's only remaining linear-in-corpus scan (VERDICT r6
-    item 1).
+    |touched lists' codes|, not |corpus|.
 
     ``attr_pred`` makes this the BATCH form of filtered vector search
-    (``pq_filtered_topk``'s serving twin, round 11): the attrs side
-    store prunes to the union of the batch's probed lists, the
-    predicate pushes into that pruned scan, and the codes restriction
-    is a vec_id semi-join — the per-query (qid, list) pairing already
-    guarantees a vector only scores for queries that probed its list,
-    so the shared allowed-set is exact.  Same probe-time coverage
-    guard as the single probe (codes in probed lists without attrs
-    rows raise — list-local with an integer nprobe, corpus-length in
-    the nprobe=None debug shape)."""
+    (``pq_filtered_topk``'s serving twin): the attrs side store prunes
+    to the union of the batch's probed lists, the predicate pushes
+    into that pruned scan, and the codes restriction is a vec_id
+    semi-join — the per-query (qid, list) pairing already guarantees a
+    vector only scores for queries that probed its list, so the shared
+    allowed-set is exact.  Guards: :func:`_pq_topk`."""
     from pyspark.sql import Window
 
     codes, codebook, centroids = read_index(spark, index_path)
@@ -521,46 +501,39 @@ def pq_batch_probe_topk(
             l2q(F.col("sub"), F.col("ce")).alias("qd"),
         )
     )
-    coverage_guard = None
+    guards = [_codebook_guard(codebook, _BATCH)]
     if nprobe is None:
         # every (query, stored vector) pair scores — restricted to
         # the list manifest (split_list invariant, _manifest_rows)
         base = _manifest_rows(codes, centroids)
         if attrs is not None:
-            base, coverage_guard = _batch_filtered_restrict(
-                base, _manifest_rows(attrs, centroids), attr_pred
-            )
-        unpacked = base.select(
-            "vec_id", F.posexplode(F.col("codes")).alias("s", "code")
-        )
-        pair_cond = (F.col("s") == F.col("qs")) & (
-            F.col("code").cast("long") == F.col("qcid")
-        )
+            attrs = _manifest_rows(attrs, centroids)
+        keys = ["vec_id"]
     else:
         probes = batch_probe_lists(queries, centroids, nprobe)
-        pruned = codes.join(
+        base = codes.join(
             F.broadcast(probes),
             F.col("list_id") == F.col("probe_cid"),
         )
         if attrs is not None:
-            lists = probes.select("probe_cid").distinct()
-            attrs_pruned = attrs.join(
-                F.broadcast(lists),
+            attrs = attrs.join(
+                F.broadcast(probes.select("probe_cid").distinct()),
                 F.col("list_id") == F.col("probe_cid"),
             )
-            pruned, coverage_guard = _batch_filtered_restrict(
-                pruned, attrs_pruned, attr_pred
-            )
-        unpacked = pruned.select(
-            "qid",
-            "vec_id",
-            F.posexplode(F.col("codes")).alias("s", "code"),
+        keys = ["qid", "vec_id"]
+    if attrs is not None:
+        base, coverage = _attrs_restrict(
+            base, attrs, attr_pred, _BATCH_ATTRS_STALE, _BATCH
         )
-        pair_cond = (
-            (F.col("s") == F.col("qs"))
-            & (F.col("code").cast("long") == F.col("qcid"))
-            & (F.col("qid") == F.col("tqid"))
-        )
+        guards.append(coverage)
+    unpacked = base.select(
+        *keys, F.posexplode(F.col("codes")).alias("s", "code")
+    )
+    pair_cond = (F.col("s") == F.col("qs")) & (
+        F.col("code").cast("long") == F.col("qcid")
+    )
+    if nprobe is not None:
+        pair_cond = pair_cond & (F.col("qid") == F.col("tqid"))
     adc = (
         unpacked.join(F.broadcast(qtable), pair_cond)
         # a query that is itself indexed must not retrieve itself
@@ -571,19 +544,9 @@ def pq_batch_probe_topk(
             F.count(F.lit(1)).alias("_n"),
         )
         .select("qid", "vec_id", _adc_sum_with_row_guard().alias("adc_dist"))
-        .unionByName(
-            _codebook_guard(
-                codebook,
-                fields=(
-                    ("qid", "long"),
-                    ("vec_id", "long"),
-                    ("adc_dist", "bigint"),
-                ),
-            )
-        )
     )
-    if coverage_guard is not None:
-        adc = adc.unionByName(coverage_guard)
+    for g in guards:
+        adc = adc.unionByName(g)
     w = Window.partitionBy("qid").orderBy(
         F.asc("adc_dist"), F.asc("vec_id")
     )
@@ -592,6 +555,105 @@ def pq_batch_probe_topk(
         .where(F.col("rank") <= k)
         .select("qid", "vec_id", "adc_dist", "rank")
     )
+
+
+def _pq_topk(
+    spark: SparkSession,
+    index_path: str,
+    query: DataFrame,
+    k: int,
+    nprobe: int | None,
+    upto_batch_id: int | None,
+    attr_pred: F.Column | None = None,
+) -> DataFrame:
+    """The one single-query ADC probe body: top-k ``(vec_id, list_id,
+    adc_dist)`` against the STORED index, optionally restricted to
+    vectors whose attr-store row satisfies ``attr_pred``.
+
+    ``nprobe=None`` scans all codes (pure PQ) restricted to the list
+    manifest (:func:`_manifest_rows`); an integer probes only the
+    nprobe coarse lists nearest the query — a broadcast centroid
+    ranking whose result prunes the codes (and attrs) scans on their
+    ``list_id`` partition column.  The filter restricts WITHIN the
+    probed lists (coarse selection ignores it — the standard
+    filtered-IVF contract: a matching vector in an unprobed list is a
+    recall miss exactly as in unfiltered IVF).  ``upto_batch_id``
+    partition-prunes codes and attrs to ``batch_id <= N``.  The plan
+    contains the codes/codebook/centroids scans and NO encode subtree
+    (pinned by tests/test_ann_index.py).
+
+    Every guard is lazy and rides the plan (``functions/guards.py``):
+
+    ==================================  =====  ========  =====
+    guard (what it refuses)             probe  filtered  batch
+    ==================================  =====  ========  =====
+    codebook not PQ_SUBS x 8 entries    x      x         x
+    vector with != PQ_SUBS code rows    x      x         x
+    watermark below an upsert/refit     wm     wm        .
+    code row without attrs row          .      x         pred
+    ==================================  =====  ========  =====
+
+    ``probe`` = ``pq_probe_topk``, ``filtered`` = ``pq_filtered_topk``,
+    ``batch`` = ``pq_batch_probe_topk``; ``wm`` = only with
+    ``upto_batch_id``, ``pred`` = only with ``attr_pred``.
+
+    * code-row count — a vec_id in two generations (re-ingested id, or
+      a probe racing a crashed compaction) would double its ADC sum.
+    * upsert/refit marker — ADC carries no corpus statistics, so
+      ERASURE needs no as-of bookkeeping (it removes code rows from
+      every generation; right-to-erasure beats time travel).  An
+      upsert rewrites history too, but the vector should still EXIST
+      in past views, so an as-of view below an upsert generation is a
+      state that never was (:func:`_upsert_asof_guard`).
+    * attrs coverage — the attrs store is maintained delta-shaped by
+      the ingest/upsert/delete paths (streaming/ann_ingest.py); this
+      is the tripwire for out-of-band writes, checked within the
+      probed lists.  With ``nprobe=None`` its anti-join runs over the
+      whole corpus — exhaustive filtered probes are a debug shape,
+      not the serving path."""
+    from ..functions.vectors import cosine
+
+    codes, codebook, centroids = read_index(spark, index_path)
+    attrs = (
+        spark.read.parquet(f"{index_path}/attrs")
+        if attr_pred is not None
+        else None
+    )
+    guards = []
+    if upto_batch_id is not None:
+        wm = F.col("batch_id") <= F.lit(int(upto_batch_id))
+        codes = codes.where(wm)
+        if attrs is not None:
+            attrs = attrs.where(wm)
+        guards += _upsert_asof_guard(spark, index_path, int(upto_batch_id))
+    if nprobe is not None:
+        probes = (
+            query.select(F.col("embedding").alias("qe"))
+            .crossJoin(F.broadcast(centroids))
+            .select("cid", cosine(F.col("qe"), F.col("ce")).alias("qcos"))
+            .orderBy(F.desc("qcos"), F.asc("cid"))
+            .limit(nprobe)
+            .select(F.col("cid").alias("probe_cid"))
+        )
+        in_probed = F.col("list_id") == F.col("probe_cid")
+        codes = codes.join(F.broadcast(probes), in_probed).select(
+            "vec_id", "list_id", "codes"
+        )
+        if attrs is not None:
+            attrs = attrs.join(F.broadcast(probes), in_probed)
+    else:
+        codes = _manifest_rows(codes, centroids)
+        if attrs is not None:
+            attrs = _manifest_rows(attrs, centroids)
+    if attrs is not None:
+        codes, coverage = _attrs_restrict(
+            codes, attrs, attr_pred, _ATTRS_STALE, _SINGLE
+        )
+        guards.insert(0, coverage)
+    scored = adc_scores_from_index(codes, codebook, query)
+    for g in guards:
+        scored = scored.unionByName(g)
+    return scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(k)
 
 
 def pq_probe_topk(
@@ -604,117 +666,55 @@ def pq_probe_topk(
 ) -> DataFrame:
     """ADC top-k against the STORED index.  ``nprobe=None`` scans all
     codes (pure PQ); an integer probes only the nprobe coarse lists
-    nearest the query — a broadcast 8-row centroid ranking whose
-    result prunes the codes scan on its ``list_id`` partition column.
-
-    ``upto_batch_id`` probes AS OF an ingest-generation watermark
-    (``batch_id <= N`` — partition pruning on the generation column,
-    the text index's bm25_topk_asof twin; the frozen build and
+    nearest the query.  ``upto_batch_id`` probes AS OF an
+    ingest-generation watermark (partition pruning on the generation
+    column, the text index's bm25_topk_asof twin; the frozen build and
     compaction folds are negative, so they sit below any non-negative
-    watermark).  ADC carries no corpus statistics, so no correction
-    bookkeeping exists on this side — and none is needed for ERASURE:
-    it physically removes code rows from every generation, so no as-of
-    view can resurrect an erased vector (right-to-erasure beats time
-    travel, by contract).  UPSERTS are different (ADVICE r8 item 2):
-    ``upsert_vectors`` rewrites history too — the old code rows leave
-    every generation — but the doc is supposed to still EXIST in past
-    views, so an as-of probe below an upsert generation would return a
-    state that never was.  Each upsert therefore leaves a marker
-    (``{index}/upserts``), and an as-of probe RAISES when its
-    watermark sits below the newest marker (lazy in-plan guard over
-    the metadata-sized marker table — bm25_topk_asof's no-correction
-    stance).  Probe the rewritten history at or above the upsert
-    generation, or the live index with ``upto_batch_id=None``.
-
-    The returned plan contains the codes/codebook/centroids table
-    scans and NO encode subtree (no embedding slicing) — the property
-    pinned by tests/test_ann_index.py."""
-    from ..functions.vectors import cosine
-
-    codes, codebook, centroids = read_index(spark, index_path)
-    asof_guard = None
-    if upto_batch_id is not None:
-        codes = codes.where(
-            F.col("batch_id") <= F.lit(int(upto_batch_id))
-        )
-        asof_guard = _upsert_asof_guard(
-            spark, index_path, int(upto_batch_id)
-        )
-    if nprobe is not None:
-        probes = (
-            query.select(F.col("embedding").alias("qe"))
-            .crossJoin(F.broadcast(centroids))
-            .select("cid", cosine(F.col("qe"), F.col("ce")).alias("qcos"))
-            .orderBy(F.desc("qcos"), F.asc("cid"))
-            .limit(nprobe)
-            .select(F.col("cid").alias("probe_cid"))
-        )
-        codes = codes.join(
-            F.broadcast(probes), F.col("list_id") == F.col("probe_cid")
-        ).select("vec_id", "list_id", "codes")
-    else:
-        codes = _manifest_rows(codes, centroids)
-    scored = adc_scores_from_index(codes, codebook, query)
-    if asof_guard is not None:
-        scored = scored.unionByName(asof_guard)
-    return (
-        scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(k)
-    )
+    watermark).  Guards: :func:`_pq_topk`."""
+    return _pq_topk(spark, index_path, query, k, nprobe, upto_batch_id)
 
 
 def _upsert_asof_guard(
     spark: SparkSession, index_path: str, upto_batch_id: int
-) -> DataFrame | None:
-    """Lazy 0-row branch refusing as-of probes whose watermark sits
-    below any generation an :func:`..streaming.ann_ingest.upsert_vectors`
-    call rewrote (ADVICE r8 item 2).  The marker table is
-    metadata-sized (one row per upsert batch); absent markers mean no
-    upsert ever ran and the probe plan is unchanged (returns None) —
-    but ONLY the missing-path case is treated as absent: a corrupt or
-    half-written marker store propagates its read error instead of
-    silently disabling the refusal (fail-closed, ADVICE r9 item 1).
-    An EXISTING-but-empty marker table passes the guard (no upsert
-    generation to refuse below — the ``coalesce`` keeps the NULL max
-    from raising an inscrutable null-message error, ADVICE r9 item 2).
-    Outputs are cast FROM the assert column (the ivf_topk lazy-guard
-    pattern) so the branch cannot constant-fold away."""
+) -> list[DataFrame]:
+    """The as-of refusal below any generation an
+    :func:`..streaming.ann_ingest.upsert_vectors` call rewrote, as a
+    0- or 1-element guard list.  The marker table is metadata-sized
+    (one row per upsert batch); absent markers mean no upsert ever ran
+    and the probe plan is unchanged — but ONLY the missing-path case
+    is treated as absent: a corrupt or half-written marker store
+    propagates its read error instead of silently disabling the
+    refusal.  An EXISTING-but-empty marker table passes (the
+    ``coalesce`` keeps the NULL max from raising an inscrutable
+    null-message error)."""
     from ..streaming.compaction import read_store_or_none
 
     markers = read_store_or_none(spark, f"{index_path}/upserts")
     if markers is None:
-        return None
-    newest = markers.agg(
-        F.max("batch_id").cast("int").alias("_mx")
-    )
-    return (
-        newest.select(
-            F.assert_true(
-                F.coalesce(
-                    F.col("_mx") <= F.lit(int(upto_batch_id)),
-                    F.lit(True),  # empty marker table: nothing to refuse
+        return []
+    return [
+        guard_branch(
+            markers.agg(F.max("batch_id").cast("int").alias("_mx")),
+            F.coalesce(
+                F.col("_mx") <= F.lit(int(upto_batch_id)),
+                F.lit(True),  # empty marker table: nothing to refuse
+            ),
+            F.concat(
+                F.lit("ANN as-of probe: upto_batch_id="),
+                F.lit(str(int(upto_batch_id))),
+                F.lit(" is below upsert generation "),
+                F.col("_mx").cast("string"),
+                F.lit(
+                    " — upsert_vectors physically rewrote the "
+                    "old code rows out of every generation, so "
+                    "this as-of view no longer exists; probe at "
+                    "or above the upsert generation, or the live "
+                    "index without a watermark"
                 ),
-                F.concat(
-                    F.lit("ANN as-of probe: upto_batch_id="),
-                    F.lit(str(int(upto_batch_id))),
-                    F.lit(" is below upsert generation "),
-                    F.col("_mx").cast("string"),
-                    F.lit(
-                        " — upsert_vectors physically rewrote the "
-                        "old code rows out of every generation, so "
-                        "this as-of view no longer exists; probe at "
-                        "or above the upsert generation, or the live "
-                        "index without a watermark"
-                    ),
-                ),
-            ).alias("_a")
+            ),
+            _SINGLE,
         )
-        .where(F.col("_a").isNotNull())
-        .select(
-            F.col("_a").cast("long").alias("vec_id"),
-            F.col("_a").cast("long").alias("list_id"),
-            F.col("_a").cast("bigint").alias("adc_dist"),
-        )
-    )
+    ]
 
 
 def build_attr_store(
@@ -797,9 +797,7 @@ def pq_filtered_topk(
     Semantics (the standard filtered-IVF contract, and what the
     DuckDB oracle replays): coarse-list selection ignores the filter
     — the query's nprobe nearest lists are probed, then the predicate
-    restricts WITHIN those lists, so a matching vector in an unprobed
-    list is a (measurable, nprobe-dialable) recall miss exactly as in
-    unfiltered IVF.
+    restricts WITHIN those lists.
 
     Scale shape: probes prune codes AND attrs on the ``list_id``
     partition column via the broadcast coarse ranking; ``attr_pred``
@@ -809,101 +807,12 @@ def pq_filtered_topk(
     selectivity; no corpus-wide metadata join exists in the plan
     (pinned by tests/test_ann_index.py).
 
-    Probe-time coverage guard (ADVICE r8 item 1): build-time coverage
-    alone cannot protect a LIVE store — vectors appended later by
-    ``streaming_ann_index_sink``, or re-encoded into a new
-    ``(batch_id, list_id)`` partition by ``upsert_vectors``, have no
-    (or no longer co-partitioned) attrs row, and the semi-join would
-    silently exclude them from every filtered probe.  So every probe
-    re-checks coverage WITHIN the probed lists: a pruned code row with
-    no attrs row raises (lazy 0-row union branch over a second
-    vec_id-only projection of the same list-pruned attrs scan —
-    list-local cost, and it cannot constant-fold away because the
-    branch outputs are cast from the assert column).  With
-    ``nprobe=None`` no list pruning applies, so the guard's anti-join
-    runs codes-vs-attrs over the WHOLE corpus — a second full
-    vec_id-column scan per probe (ADVICE r9 item 4); exhaustive
-    filtered probes are a correctness/debug shape, not the serving
-    path — serve with an integer nprobe, where the guard stays
-    list-local.  The attr store is maintained DELTA-SHAPED by the
-    ingest/upsert/delete paths (streaming/ann_ingest.py — the batch's
-    attrs rows ride the same call into the same (batch_id, list_id)
-    partitions), so this guard is a tripwire for OUT-OF-BAND writes,
-    not a scheduled-rebuild prompt; ``build_attr_store`` clears it
-    after one.
-
     ``upto_batch_id`` composes filtered search with AS-OF time travel
-    (round 11 — "rank within lang='en' exactly as the index stood
-    after batch N", the reproducible-filtered-retrieval shape a
-    training run pins): the watermark partition-prunes BOTH the codes
-    and the attrs scans (attrs ride the same ``batch_id`` generations,
-    so the committed prefix of one is the committed prefix of the
-    other), and the same upsert/refit marker guard as
-    ``pq_probe_topk`` refuses watermarks below rewritten history.
-    """
-    from ..functions.vectors import cosine
-
-    codes, codebook, centroids = read_index(spark, index_path)
-    attrs = spark.read.parquet(f"{index_path}/attrs")
-    asof_guard = None
-    if upto_batch_id is not None:
-        codes = codes.where(F.col("batch_id") <= F.lit(int(upto_batch_id)))
-        attrs = attrs.where(F.col("batch_id") <= F.lit(int(upto_batch_id)))
-        asof_guard = _upsert_asof_guard(
-            spark, index_path, int(upto_batch_id)
-        )
-    if nprobe is not None:
-        probes = (
-            query.select(F.col("embedding").alias("qe"))
-            .crossJoin(F.broadcast(centroids))
-            .select("cid", cosine(F.col("qe"), F.col("ce")).alias("qcos"))
-            .orderBy(F.desc("qcos"), F.asc("cid"))
-            .limit(nprobe)
-            .select(F.col("cid").alias("probe_cid"))
-        )
-        codes = codes.join(
-            F.broadcast(probes), F.col("list_id") == F.col("probe_cid")
-        ).select("vec_id", "list_id", "codes")
-        attrs = attrs.join(
-            F.broadcast(probes), F.col("list_id") == F.col("probe_cid")
-        )
-    else:
-        codes = _manifest_rows(codes, centroids)
-        attrs = _manifest_rows(attrs, centroids)
-    allowed = attrs.where(attr_pred).select("vec_id")
-    uncovered = (
-        codes.select("vec_id")
-        .join(attrs.select("vec_id"), "vec_id", "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("_nu"))
+    ("rank within lang='en' exactly as the index stood after batch
+    N"): the watermark partition-prunes BOTH the codes and the attrs
+    scans (attrs ride the same ``batch_id`` generations, so the
+    committed prefix of one is the committed prefix of the other).
+    Guards: :func:`_pq_topk`."""
+    return _pq_topk(
+        spark, index_path, query, k, nprobe, upto_batch_id, attr_pred
     )
-    coverage_guard = (
-        uncovered.select(
-            F.assert_true(
-                F.col("_nu") == 0,
-                F.concat(
-                    F.col("_nu").cast("string"),
-                    F.lit(
-                        " stored code row(s) in the probed lists have "
-                        "no attrs row — the attr store is stale (a "
-                        "streamed ingest or upsert_vectors landed "
-                        "since it was built) and a filtered probe "
-                        "would silently drop those vectors; re-run "
-                        "build_attr_store"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(
-            F.col("_a").cast("long").alias("vec_id"),
-            F.col("_a").cast("long").alias("list_id"),
-            F.col("_a").cast("bigint").alias("adc_dist"),
-        )
-    )
-    codes = codes.join(allowed, "vec_id", "left_semi")
-    scored = adc_scores_from_index(codes, codebook, query).unionByName(
-        coverage_guard
-    )
-    if asof_guard is not None:
-        scored = scored.unionByName(asof_guard)
-    return scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(k)

@@ -34,6 +34,46 @@ RRF_K = 60        # the standard RRF damping constant
 HYBRID_DEPTH = 20  # candidates taken from each ranker
 
 
+def _rrf_fuse(
+    brank: DataFrame, vrank: DataFrame, k: int, *part: str
+) -> DataFrame:
+    """The one fusion tail: ``brank`` ``(*part, doc_id, rank_text)``
+    full-outer-joined to ``vrank`` ``(*part, doc_id, rank_vec)``, scored
+    ``sum(1/(RRF_K + rank))`` (a side that did not rank a doc adds 0),
+    and the top-``k`` per ``part`` (the query id of a batch; nothing
+    for a single query) ranked by score, ties by doc_id."""
+    from pyspark.sql import Window
+
+    zero = F.lit(0.0).cast("double")
+    one = F.lit(1.0).cast("double")
+    fused = brank.join(vrank, [*part, "doc_id"], "full_outer").select(
+        *part,
+        "doc_id",
+        "rank_text",
+        "rank_vec",
+        (
+            F.coalesce(
+                one / (F.lit(RRF_K) + F.col("rank_text")).cast("double"),
+                zero,
+            )
+            + F.coalesce(
+                one / (F.lit(RRF_K) + F.col("rank_vec")).cast("double"),
+                zero,
+            )
+        ).alias("rrf_score"),
+    )
+    w = Window.partitionBy(*part).orderBy(
+        F.desc("rrf_score"), F.asc("doc_id")
+    )
+    return (
+        fused.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= k)
+        .select(
+            *part, "doc_id", "rank_text", "rank_vec", "rrf_score", "rank"
+        )
+    )
+
+
 def hybrid_batch_rrf(
     spark: SparkSession,
     text_index_path: str,
@@ -54,8 +94,6 @@ def hybrid_batch_rrf(
     FILTERED batch hybrid — each side's restriction rides its own
     index layout (term-filtered attrs scan / list-pruned attrs scan),
     exactly as in ``hybrid_filtered_rrf``."""
-    from pyspark.sql import Window
-
     from .ann_index import pq_batch_probe_topk
     from .text_index import bm25_batch_topk
 
@@ -79,34 +117,7 @@ def hybrid_batch_rrf(
         F.col("vec_id").alias("doc_id"),
         F.col("rank").alias("rank_vec"),
     )
-    zero = F.lit(0.0).cast("double")
-    one = F.lit(1.0).cast("double")
-    fused = brank.join(vrank, ["qid", "doc_id"], "full_outer").select(
-        "qid",
-        "doc_id",
-        "rank_text",
-        "rank_vec",
-        (
-            F.coalesce(
-                one / (F.lit(RRF_K) + F.col("rank_text")).cast("double"),
-                zero,
-            )
-            + F.coalesce(
-                one / (F.lit(RRF_K) + F.col("rank_vec")).cast("double"),
-                zero,
-            )
-        ).alias("rrf_score"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "doc_id", "rank_text", "rank_vec", "rrf_score", "rank"
-        )
-    )
+    return _rrf_fuse(brank, vrank, k, "qid")
 
 
 def hybrid_filtered_rrf(
@@ -159,26 +170,4 @@ def hybrid_filtered_rrf(
         .withColumn("rank_vec", F.row_number().over(wv).cast("int"))
         .select(F.col("vec_id").alias("doc_id"), "rank_vec")
     )
-    zero = F.lit(0.0).cast("double")
-    one = F.lit(1.0).cast("double")
-    fused = brank.join(vrank, "doc_id", "full_outer").select(
-        "doc_id",
-        "rank_text",
-        "rank_vec",
-        (
-            F.coalesce(
-                one / (F.lit(RRF_K) + F.col("rank_text")).cast("double"),
-                zero,
-            )
-            + F.coalesce(
-                one / (F.lit(RRF_K) + F.col("rank_vec")).cast("double"),
-                zero,
-            )
-        ).alias("rrf_score"),
-    )
-    w = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "rank_text", "rank_vec", "rrf_score", "rank")
-    )
+    return _rrf_fuse(brank, vrank, k)

@@ -21,6 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.guards import guard_branch
 from ..functions.vectors import (
     cosine,
     cosine_given_bnorm,
@@ -358,35 +359,20 @@ def ivf_topk(
     # in-row gate cannot catch), and costs no separate Spark job (an
     # eager count() here measurably doubled the ANN bench).
     ncent = centroids.agg(F.count(F.lit(1)).cast("int").alias("_ncent"))
-    guard = (
-        ncent.select(
-            F.assert_true(
-                F.col("_ncent") == expected,
-                F.concat(
-                    F.lit("IVF centroid set has "),
-                    F.col("_ncent").cast("string"),
-                    F.lit(
-                        f" rows, expected {expected} — corpus lacks "
-                        f"the seed vec_ids {IVF_SEED_LO}..{IVF_SEED_HI}"
-                        " or the fitted quantizer dropped lists; "
-                        "refusing to probe a broken index"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        # Always-false predicate whose evaluation forces _a.  This
-        # relies on Catalyst NOT constant-folding IsNotNull(assert_true)
-        # over an always-null column (true on Spark 4.1.2); if a future
-        # optimizer rule pruned the branch, the guard would silently
-        # stop raising — tests/test_similarity_quality.py's broken-index
-        # test is the tripwire that would catch exactly that (ADVICE r4).
-        .where(F.col("_a").isNotNull())
-        .select(
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in topk.schema.fields
-            ]
-        )
+    guard = guard_branch(
+        ncent,
+        F.col("_ncent") == expected,
+        F.concat(
+            F.lit("IVF centroid set has "),
+            F.col("_ncent").cast("string"),
+            F.lit(
+                f" rows, expected {expected} — corpus lacks "
+                f"the seed vec_ids {IVF_SEED_LO}..{IVF_SEED_HI}"
+                " or the fitted quantizer dropped lists; "
+                "refusing to probe a broken index"
+            ),
+        ),
+        topk.schema,
     )
     # re-sort after the union: union output order is unspecified even
     # with an empty branch, and callers rely on the documented

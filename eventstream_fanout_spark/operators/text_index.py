@@ -50,27 +50,9 @@ predicate, so the scan touches only the matching terms' posting rows;
 toward 1).  The raw documents table and the doclens table are never
 read at query time.
 
-Fail-closed contract (all lazy, riding expressions the probe already
-pays for):
-
-* static probe: any INGESTED generation (``batch_id >= 0``) in
-  ``stats`` OR in the term-filtered postings raises (the frozen-only
-  contract — ADVICE r6 item 1's gap, closed); erasure correction
-  generations (``< -1``) are folded exactly by the merge-on-read
-  vocab/stats sums, so erasure alone does not invalidate it.  A vocab
-  generation without a stats row (a crashed half-applied erasure)
-  raises via the vocab-scan coverage guard.
-* merged probe: duplicated ``(tok, doc_id)`` posting rows among the
-  scanned terms raise (cross-generation re-ingest or a probe racing a
-  crashed compaction — ADVICE r6 item 2); a generation that appears in
-  the scanned postings without a ``stats`` row raises (the sink's
-  crash window between its postings and stats writes — replay heals).
-  Coverage note, stated plainly: both guards are candidate-scoped
-  (they see the term-filtered scan), so a duplicated doc NONE of whose
-  terms match the query is not probe-detected — its only effect is an
-  n_docs/total_len overcount in the global stats; the ingest sink's
-  doc_id-uniqueness check (streaming/text_ingest.py) enforces the
-  contract at write time, and compaction heals it.
+Every probe is a call into one private core, ``_bm25_core``; its
+docstring holds the probe x guard table (all guards lazy, riding
+expressions the probe already pays for — ``functions/guards.py``).
 
 Scoring is the log-free BM25 variant: textbook BM25 idf is
 ``ln((N - df + 0.5)/(df + 0.5))``, but transcendentals diverge across
@@ -92,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.core import dsum
+from ..functions.guards import guard_branch, guard_rider
 from ..functions.hashing import tokens
 from ..streaming.compaction import write_generation
 
@@ -274,24 +257,248 @@ def _merged_stats(stats: DataFrame) -> DataFrame:
     )
 
 
-def _topk_from_scored(scored: DataFrame) -> DataFrame:
-    """Shared scoring tail: per-doc term count + quantized score sum,
-    ordered top-k.  ``scored`` rows are (doc_id, tok, sc, batch_id);
-    the generation column rides into the aggregate so callers' guards
-    can assert on it for free (the max shares the existing groupBy)."""
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("_cnt"),
-            F.max("batch_id").alias("_mb"),
-            dsum(F.col("sc"), "bm25_score"),
+# Columns of the scored relation (one row per matched (doc, term)); a
+# batch probe prepends ``qid``.  Every guard branch is shaped to them.
+_SCORED = (
+    ("doc_id", "bigint"),
+    ("tok", "string"),
+    ("sc", "double"),
+    ("batch_id", "int"),
+)
+
+_ASOF_ERASED = (
+    "text index as-of probe: the store holds erasure "
+    "correction generations — erasure is destructive (no "
+    "earlier view is reconstructible, by right-to-erasure "
+    "contract); probe the live index with bm25_topk_merged"
+)
+_FILTERED_ASOF_ERASED = (
+    "filtered as-of probe: the store holds erasure "
+    "correction generations — erasure is destructive (no "
+    "earlier view is reconstructible, by right-to-erasure "
+    "contract); probe the live index without a watermark"
+)
+_ATTRS_STALE = (
+    " scanned posting row(s) have no attrs row — "
+    "the text attr store is stale (an out-of-band "
+    "writer appended postings without their "
+    "attrs) and a filtered probe would silently "
+    "drop those documents; re-run "
+    "build_text_attr_store"
+)
+_BATCH_ATTRS_STALE = (
+    " scanned posting row(s) have no attrs row — "
+    "the text attr store is stale; re-run "
+    "build_text_attr_store"
+)
+
+
+def _bm25_core(
+    spark: SparkSession,
+    index_path: str,
+    terms: list[str],
+    *,
+    static: bool = False,
+    upto_batch_id: int | None = None,
+    attr_pred: F.Column | None = None,
+    qterms: DataFrame | None = None,
+) -> DataFrame:
+    """The one BM25 probe body: ``([qid,] doc_id, n_terms_matched,
+    bm25_score)`` per matched doc, unranked.  Every public probe is a
+    call into it plus a top-k tail.
+
+    Scan: ``postings`` filtered ``tok IN terms`` (pushed to parquet);
+    df from the same scan (merge-on-read, :func:`_merged_vocab`) or,
+    ``static``, from the stored vocab; n_docs/total_len from the
+    #generations-row ``stats`` fold.  ``upto_batch_id`` partition-prunes
+    postings, stats and attrs to ``batch_id <= N``.  ``attr_pred``
+    restricts CANDIDATES through the term-filtered postings-layout
+    attrs scan (a left-semi join) — df and n_docs/avgdl stay
+    corpus-global, so a doc scores the same filtered or not.
+    ``qterms`` ``(qid, tok)`` maps a batch's matched rows back to its
+    queries (one scan for the whole batch).
+
+    Every guard is lazy and rides the plan (``functions/guards.py``):
+
+    ==============================  ======  ======  ====  ========  =======  =====
+    guard (what it refuses)         static  merged  asof  filtered  f. asof  batch
+    ==============================  ======  ======  ====  ========  =======  =====
+    empty stats table               x       x       x     x         x        x
+    duplicated (tok, doc_id) rows   .       x       x     x         x        x
+    postings gen without stats      .       x       x     x         x        x
+    vocab gen without stats         x       .       .     .         .        .
+    stats correction w/o tombstone  x       x       .     x         .        x
+    ingested gen (frozen-only)      x       .       .     .         .        .
+    correction below a watermark    .       .       x     .         x        .
+    posting row without attrs row   .       .       .     x         x        pred
+    watermark below attr evolution  .       .       .     .         x        .
+    query term outside the literal  .       .       .     .         .        x
+    ==============================  ======  ======  ====  ========  =======  =====
+
+    ``bm25_topk_bounded`` is ``merged``; ``pred`` = only with
+    ``attr_pred``.  Why each exists:
+
+    * duplicated rows — a doc in two generations (cross-generation
+      re-ingest, or a probe racing a crashed compaction) would double
+      its score rows; asserted on the df aggregate.
+    * postings / vocab generation without stats — a writer crashed
+      between its data and (LAST) stats writes; replay heals.
+    * correction without tombstone — ``delete_docs`` crashed between
+      its stats correction and its tombstone commit, so the corrected
+      rollup is live while the doomed postings still score.
+    * ingested generation — the static probe's stored vocab/stats are
+      only valid for the frozen build plus erasure corrections (which
+      the merge-on-read sums fold exactly); asserted on the stats fold
+      (any completed ingest) and on the scanned postings (an ingest
+      that crashed before its stats row).
+    * correction below a watermark — erasure is destructive by
+      contract; a correction's deltas are global, so no earlier view
+      is reconstructible.  Corrections are negative generations, below
+      every non-negative watermark, so this refuses every store the
+      correction-commit guard would: a watermarked probe drops that
+      guard.
+    * attrs coverage — the attrs store is delta-maintained by the
+      ingest/delete/upsert ops; this is the tripwire for out-of-band
+      writes.
+    * attr evolution — ``add_doc_attr_column`` backfilled the new
+      column into every historical generation, so a filtered view
+      below the evolve generation never existed.
+
+    Coverage, stated plainly: the row guards are candidate-scoped
+    (they see the term-filtered scan), so a duplicated doc none of
+    whose terms match the query is not probe-detected — its only
+    effect is an n_docs/total_len overcount in the global stats; the
+    ingest sink's doc_id-uniqueness check (streaming/text_ingest.py)
+    enforces the contract at write time, and compaction heals it."""
+    keys = ("qid",) if qterms is not None else ()
+    fields = (("qid", "bigint"),) * len(keys) + _SCORED
+    in_terms = F.col("tok").isin(terms)
+    postings = spark.read.parquet(f"{index_path}/postings").where(in_terms)
+    stats_rows = spark.read.parquet(f"{index_path}/stats")
+    attrs = (
+        spark.read.parquet(f"{index_path}/attrs").where(in_terms)
+        if attr_pred is not None
+        else None
+    )
+    guards = []
+    if upto_batch_id is not None:
+        wm = F.col("batch_id") <= F.lit(int(upto_batch_id))
+        postings = postings.where(wm)
+        stats_rows = stats_rows.where(wm)
+        if attrs is not None:
+            attrs = attrs.where(wm)
+            guards += _attr_evolution_guard(
+                spark, index_path, int(upto_batch_id), fields
+            )
+    stats = _merged_stats(stats_rows.drop("batch_id"))
+    if static:
+        vocab = _stored_vocab(spark, index_path, terms, stats_rows)
+        stats = _refusing_stats(
+            stats,
+            stats_rows.agg(F.max("batch_id").alias("_g")),
+            F.col("_g") == F.lit(FROZEN_BATCH_ID),
+            F.concat(
+                F.lit("text index static probe: the index holds generation "),
+                F.col("_g").cast("string"),
+                F.lit(
+                    " beyond the frozen build — the snapshot vocab/stats "
+                    "are stale; probe with bm25_topk_merged (or compact "
+                    "and rebuild the snapshot)"
+                ),
+            ),
         )
+    else:
+        vocab = _merged_vocab(postings)
+        guards.append(_generation_coverage_guard(postings, stats_rows, fields))
+        if upto_batch_id is not None:
+            stats = _refusing_stats(
+                stats,
+                stats_rows.agg(F.min("n_docs").alias("_g")),
+                F.col("_g") >= 0,
+                F.lit(
+                    _FILTERED_ASOF_ERASED if attrs is not None
+                    else _ASOF_ERASED
+                ),
+            )
+    if upto_batch_id is None:
+        guards.append(
+            _correction_commit_guard(spark, index_path, stats_rows, fields)
+        )
+    scoring = postings
+    if attrs is not None:
+        allowed = attrs.where(attr_pred).select("doc_id").distinct()
+        uncovered = (
+            postings.select("tok", "doc_id")
+            .join(
+                attrs.select("tok", "doc_id"), ["tok", "doc_id"], "left_anti"
+            )
+            .agg(F.count(F.lit(1)).cast("long").alias("_nu"))
+        )
+        guards.append(
+            guard_branch(
+                uncovered,
+                F.col("_nu") == 0,
+                F.concat(
+                    F.col("_nu").cast("string"),
+                    F.lit(_BATCH_ATTRS_STALE if keys else _ATTRS_STALE),
+                ),
+                fields,
+            )
+        )
+        scoring = postings.join(allowed, "doc_id", "left_semi")
+    if qterms is not None:
+        scoring = scoring.join(F.broadcast(qterms), "tok")
+    scored = (
+        scoring.join(F.broadcast(vocab), "tok")
+        .crossJoin(F.broadcast(stats))
         .select(
-            "doc_id",
-            F.col("_cnt").alias("n_terms_matched"),
-            "bm25_score",
-            "_mb",
+            *keys, "doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id"
         )
+    )
+    for g in guards:
+        scored = scored.unionByName(g)
+    # the generation max shares the groupBy, so the static probe's
+    # scanned-postings guard costs no extra aggregate
+    agg = scored.groupBy(*keys, "doc_id").agg(
+        F.count(F.lit(1)).cast("int").alias("n_terms_matched"),
+        F.max("batch_id").alias("_mb"),
+        dsum(F.col("sc"), "bm25_score"),
+    )
+    n_terms = F.col("n_terms_matched")
+    if static:
+        n_terms = guard_rider(
+            n_terms,
+            F.col("_mb") == F.lit(FROZEN_BATCH_ID),
+            F.concat(
+                F.lit("text index static probe: scanned postings include "
+                      "generation "),
+                F.col("_mb").cast("string"),
+                F.lit(
+                    " beyond the frozen build (an ingest sink wrote "
+                    "postings here) — the snapshot vocab/stats are stale; "
+                    "probe with bm25_topk_merged"
+                ),
+            ),
+            "int",
+        )
+    return agg.select(
+        *keys, "doc_id", n_terms.alias("n_terms_matched"), "bm25_score"
+    )
+
+
+def _topk(matched: DataFrame, k: int) -> DataFrame:
+    """The single-query tail: best score first, ties by doc_id."""
+    return matched.orderBy(F.desc("bm25_score"), F.asc("doc_id")).limit(k)
+
+
+def _refusing_stats(
+    stats: DataFrame, probe: DataFrame, ok: F.Column, message: F.Column
+) -> DataFrame:
+    """The 1-row stats side with a refusal riding ``n_docs``: ``ok``
+    is evaluated on the 1-row ``probe`` aggregate of the stats rows."""
+    return stats.crossJoin(probe).select(
+        guard_rider(F.col("n_docs"), ok, message, "bigint").alias("n_docs"),
+        "total_len",
     )
 
 
@@ -304,95 +511,9 @@ def bm25_topk(
     generations, whose vocab/stats deltas the merge-on-read sums fold
     in exactly).  The postings/vocab scans are filtered ``tok IN
     terms`` (pushed to parquet); documents and doclens are never read;
-    ``dl`` comes off the posting rows.
-
-    Fail-closed (ADVICE r6 item 1): probing an index that has ingested
-    batches since its build would use this probe outside its
-    frozen-only contract — two lazy guards raise instead: the stats
-    aggregate asserts no stats generation is NEWER than the frozen one
-    (global — any completed ingest trips it; erasure corrections are
-    always older, so an erased-but-never-ingested index stays
-    probeable), and the scoring aggregate asserts the scanned postings
-    are frozen-generation only (candidate-scoped — catches a crashed
-    ingest that wrote postings but no stats row).  A third guard rides
-    the vocab scan: a vocab generation without a stats row is a
-    half-applied erasure (crash between its delta writes) — raise.
-    Use :func:`bm25_topk_merged` on an ingested index."""
-    postings = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("tok").isin(terms)
-    )
-    stats_rows = spark.read.parquet(f"{index_path}/stats")
-    vocab = _stored_vocab(spark, index_path, terms, stats_rows)
-    frozen_assert = F.assert_true(
-        F.col("_mxg") == F.lit(FROZEN_BATCH_ID),
-        F.concat(
-            F.lit("text index static probe: the index holds generation "),
-            F.col("_mxg").cast("string"),
-            F.lit(
-                " beyond the frozen build — the snapshot vocab/stats "
-                "are stale; probe with bm25_topk_merged (or compact "
-                "and rebuild the snapshot)"
-            ),
-        ),
-    )
-    stats = (
-        _merged_stats(stats_rows.drop("batch_id"))
-        .crossJoin(
-            stats_rows.agg(F.max("batch_id").alias("_mxg"))
-        )
-        .select(
-            (
-                F.col("n_docs")
-                + F.coalesce(frozen_assert.cast("bigint"), F.lit(0).cast("bigint"))
-            ).cast("bigint").alias("n_docs"),
-            "total_len",
-        )
-    )
-    scored = (
-        postings.join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id")
-    ).unionByName(
-        _correction_commit_guard(
-            spark,
-            index_path,
-            stats_rows,
-            fields=(
-                ("doc_id", "bigint"),
-                ("tok", "string"),
-                ("sc", "double"),
-                ("batch_id", "int"),
-            ),
-        )
-    )
-    postings_frozen_assert = F.assert_true(
-        F.col("_mb") == F.lit(FROZEN_BATCH_ID),
-        F.concat(
-            F.lit("text index static probe: scanned postings include "
-                  "generation "),
-            F.col("_mb").cast("string"),
-            F.lit(
-                " beyond the frozen build (an ingest sink wrote "
-                "postings here) — the snapshot vocab/stats are stale; "
-                "probe with bm25_topk_merged"
-            ),
-        ),
-    )
-    return (
-        _topk_from_scored(scored)
-        .select(
-            "doc_id",
-            (
-                F.col("n_terms_matched")
-                + F.coalesce(
-                    postings_frozen_assert.cast("int"), F.lit(0).cast("int")
-                )
-            ).cast("int").alias("n_terms_matched"),
-            "bm25_score",
-        )
-        .orderBy(F.desc("bm25_score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    ``dl`` comes off the posting rows.  Refuses an ingested index
+    (guards: :func:`_bm25_core`); use :func:`bm25_topk_merged` there."""
+    return _topk(_bm25_core(spark, index_path, terms, static=True), k)
 
 
 def bm25_topk_merged(
@@ -408,44 +529,8 @@ def bm25_topk_merged(
     per generation, folded back toward 1 by compact_text_index).  No
     per-document relation is read — ``dl`` rides the posting rows
     (round-7 denormalization; round 6 scanned doclens twice here).
-
-    Fail-closed guards (all riding expressions the probe pays for
-    anyway): duplicated ``(tok, doc_id)`` rows among the scanned terms
-    raise (cross-generation re-ingest or a probe racing a crashed
-    compaction would silently double that doc's score rows — ADVICE r6
-    item 2, the ANN per-vector 8-code-row guard's text twin); a
-    generation present in the scanned postings but absent from stats
-    raises (the sink's crash window between its postings and stats
-    writes — replaying the crashed batch heals, the sink writes stats
-    LAST so the failure direction is always detectable-missing, never
-    silent-ghost-stats)."""
-    postings = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("tok").isin(terms)
-    )
-    vocab = _merged_vocab(postings)
-    stats_rows = spark.read.parquet(f"{index_path}/stats")
-    stats = _merged_stats(stats_rows.drop("batch_id"))
-    scored = (
-        postings.join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id")
-    )
-    fields = (
-        ("doc_id", "bigint"),
-        ("tok", "string"),
-        ("sc", "double"),
-        ("batch_id", "int"),
-    )
-    guard = _generation_coverage_guard(postings, stats_rows, fields)
-    commit_guard = _correction_commit_guard(
-        spark, index_path, stats_rows, fields
-    )
-    return (
-        _topk_from_scored(scored.unionByName(guard).unionByName(commit_guard))
-        .select("doc_id", "n_terms_matched", "bm25_score")
-        .orderBy(F.desc("bm25_score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    Guards: :func:`_bm25_core`."""
+    return _topk(_bm25_core(spark, index_path, terms), k)
 
 
 def _merged_vocab(postings: DataFrame) -> DataFrame:
@@ -463,28 +548,24 @@ def _merged_vocab(postings: DataFrame) -> DataFrame:
         )
         .select(
             "tok",
-            (
-                F.col("_df")
-                + F.coalesce(
-                    F.assert_true(
-                        F.col("_rows") == F.col("_df"),
-                        F.concat(
-                            F.lit("text index probe: term '"),
-                            F.col("tok"),
-                            F.lit("' has "),
-                            (F.col("_rows") - F.col("_df")).cast("string"),
-                            F.lit(
-                                " duplicated (tok, doc_id) posting "
-                                "row(s) — a doc was re-ingested under a "
-                                "new generation or a compaction crashed "
-                                "mid-fold; re-run compact_text_index "
-                                "before probing"
-                            ),
-                        ),
-                    ).cast("bigint"),
-                    F.lit(0).cast("bigint"),
-                )
-            ).cast("bigint").alias("df"),
+            guard_rider(
+                F.col("_df"),
+                F.col("_rows") == F.col("_df"),
+                F.concat(
+                    F.lit("text index probe: term '"),
+                    F.col("tok"),
+                    F.lit("' has "),
+                    (F.col("_rows") - F.col("_df")).cast("string"),
+                    F.lit(
+                        " duplicated (tok, doc_id) posting "
+                        "row(s) — a doc was re-ingested under a "
+                        "new generation or a compaction crashed "
+                        "mid-fold; re-run compact_text_index "
+                        "before probing"
+                    ),
+                ),
+                "bigint",
+            ).alias("df"),
         )
     )
 
@@ -495,9 +576,7 @@ def _generation_coverage_guard(
     fields: tuple[tuple[str, str], ...],
     what: str = "postings",
 ) -> DataFrame:
-    """0-row lazy union branch (the ivf_topk pattern; outputs cast
-    FROM the assert column so the branch cannot constant-fold away —
-    round-6 lesson #1): every batch_id in the ``scanned`` relation
+    """Guard branch: every batch_id in the ``scanned`` relation
     (term-filtered postings, or the term-filtered vocab scan) must
     have a stats row, or a writer's crash window between its data and
     stats writes would silently score against a rollup that does not
@@ -511,26 +590,20 @@ def _generation_coverage_guard(
         .join(stats_rows.select("batch_id"), "batch_id", "left_anti")
         .agg(F.count(F.lit(1)).cast("int").alias("_nm"))
     )
-    return (
-        missing.select(
-            F.assert_true(
-                F.col("_nm") == 0,
-                F.concat(
-                    F.col("_nm").cast("string"),
-                    F.lit(
-                        f" index generation(s) have {what} but no "
-                        "stats row — a writer crashed between its "
-                        f"{what} and stats writes; replay the batch "
-                        "(or re-run the erasure — both are idempotent) "
-                        "before probing"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(
-            *[F.col("_a").cast(t).alias(n) for n, t in fields]
-        )
+    return guard_branch(
+        missing,
+        F.col("_nm") == 0,
+        F.concat(
+            F.col("_nm").cast("string"),
+            F.lit(
+                f" index generation(s) have {what} but no "
+                "stats row — a writer crashed between its "
+                f"{what} and stats writes; replay the batch "
+                "(or re-run the erasure — both are idempotent) "
+                "before probing"
+            ),
+        ),
+        fields,
     )
 
 
@@ -540,19 +613,16 @@ def _correction_commit_guard(
     stats_rows: DataFrame,
     fields: tuple[tuple[str, str], ...],
 ) -> DataFrame:
-    """0-row lazy union branch closing the delete_docs crash window
-    VERDICT r9 "What's wrong" item 2 names: the erasure writes vocab
-    delta -> stats correction -> tombstones (commit marker LAST), so a
-    crash between the stats write and the tombstone commit leaves the
-    corrected n_docs/total_len LIVE while the doomed postings still
-    score — and neither the vocab-without-stats guard nor the
-    postings-coverage guard trips (the correction generation HAS its
-    stats row; it has no postings).  Detection: every stats CORRECTION
-    generation (``n_docs < 0`` — structural generations are always
-    non-negative) must have its tombstone partition, or the probe
-    raises; re-running the same delete_docs heals (the orphan
-    correction is overwritten in place — `_next_correction_gen`
-    ignores uncommitted corrections — and the tombstone lands).
+    """Guard branch closing the delete_docs crash window: the erasure
+    writes vocab delta -> stats correction -> tombstones (commit
+    marker LAST), so a crash between the stats write and the tombstone
+    commit leaves the corrected n_docs/total_len LIVE while the doomed
+    postings still score — and neither coverage guard trips (the
+    correction generation HAS its stats row; it has no postings).
+    Every stats CORRECTION generation (``n_docs < 0`` — structural
+    generations are always non-negative) must have its tombstone
+    partition; re-running the same delete_docs heals (the orphan
+    correction is overwritten in place and the tombstone lands).
 
     Cost: the stats scan the probe already pays (generations-sized) +
     one read of the metadata-sized tombstones table.  The table-
@@ -566,38 +636,65 @@ def _correction_commit_guard(
         .distinct()
     )
     tombs = read_store_or_none(spark, f"{index_path}/tombstones")
-    if tombs is None:
-        missing = corr.agg(F.count(F.lit(1)).cast("int").alias("_nm"))
-    else:
-        missing = (
-            corr.join(
-                tombs.select("batch_id").distinct(),
-                "batch_id",
-                "left_anti",
-            )
-            .agg(F.count(F.lit(1)).cast("int").alias("_nm"))
+    if tombs is not None:
+        corr = corr.join(
+            tombs.select("batch_id").distinct(), "batch_id", "left_anti"
         )
-    return (
-        missing.select(
-            F.assert_true(
-                F.col("_nm") == 0,
-                F.concat(
-                    F.col("_nm").cast("string"),
-                    F.lit(
-                        " stats correction generation(s) have no "
-                        "tombstone commit partition — a delete_docs "
-                        "call crashed between its stats-correction "
-                        "write and its tombstone commit, so the "
-                        "corrected rollup is live while the doomed "
-                        "postings still score; re-run the same "
-                        "delete_docs before probing"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(*[F.col("_a").cast(t).alias(n) for n, t in fields])
+    return guard_branch(
+        corr.agg(F.count(F.lit(1)).cast("int").alias("_nm")),
+        F.col("_nm") == 0,
+        F.concat(
+            F.col("_nm").cast("string"),
+            F.lit(
+                " stats correction generation(s) have no "
+                "tombstone commit partition — a delete_docs "
+                "call crashed between its stats-correction "
+                "write and its tombstone commit, so the "
+                "corrected rollup is live while the doomed "
+                "postings still score; re-run the same "
+                "delete_docs before probing"
+            ),
+        ),
+        fields,
     )
+
+
+def _attr_evolution_guard(
+    spark: SparkSession,
+    index_path: str,
+    upto_batch_id: int,
+    fields: tuple[tuple[str, str], ...],
+) -> list[DataFrame]:
+    """The filtered as-of refusal below an attr-evolution marker
+    (add_doc_attr_column), as a 0- or 1-element guard list: an absent
+    marker store means no evolution ever ran (plan unchanged); the
+    store is metadata-sized when present."""
+    from ..streaming.compaction import read_store_or_none
+
+    evo = read_store_or_none(spark, f"{index_path}/attr_evolutions")
+    if evo is None:
+        return []
+    return [
+        guard_branch(
+            evo.agg(F.max("batch_id").cast("int").alias("_mx")),
+            F.coalesce(F.col("_mx") <= F.lit(upto_batch_id), F.lit(True)),
+            F.concat(
+                F.lit("filtered as-of probe: upto_batch_id="),
+                F.lit(str(upto_batch_id)),
+                F.lit(" is below attr-evolution generation "),
+                F.col("_mx").cast("string"),
+                F.lit(
+                    " — add_doc_attr_column backfilled "
+                    "the new column into every historical "
+                    "generation, so this filtered as-of "
+                    "view never existed; probe at or "
+                    "above the evolve generation, or the "
+                    "live index without a watermark"
+                ),
+            ),
+            fields,
+        )
+    ]
 
 
 def _stored_vocab(
@@ -647,65 +744,10 @@ def bm25_topk_asof(
     The frozen build (-1) and compaction folds (< -1) are always
     below any non-negative watermark, so an as-of probe over a
     compacted store sees the fold (which is exactly the committed
-    prefix it represents).
-
-    Fail-closed (and deliberately so): a store that has been ERASED
-    refuses as-of probes — erasure is destructive by contract (a
-    right-to-erasure that a time-travel probe could resurrect would
-    not be an erasure), and a correction generation's deltas are
-    global (they correct the store as of erasure time), so no earlier
-    view is reconstructible.  The guard rides the stats aggregate the
-    probe already pays: any ``n_docs < 0`` row (a correction) raises."""
-    postings = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("tok").isin(terms)
-        & (F.col("batch_id") <= F.lit(int(upto_batch_id)))
-    )
-    vocab = _merged_vocab(postings)
-    stats_rows = spark.read.parquet(f"{index_path}/stats").where(
-        F.col("batch_id") <= F.lit(int(upto_batch_id))
-    )
-    no_correction = F.assert_true(
-        F.col("_mn") >= 0,
-        F.lit(
-            "text index as-of probe: the store holds erasure "
-            "correction generations — erasure is destructive (no "
-            "earlier view is reconstructible, by right-to-erasure "
-            "contract); probe the live index with bm25_topk_merged"
-        ),
-    )
-    guarded_stats = (
-        stats_rows.agg(F.min("n_docs").alias("_mn"))
-        .crossJoin(_merged_stats(stats_rows.drop("batch_id")))
-        .select(
-            (
-                F.col("n_docs")
-                + F.coalesce(
-                    no_correction.cast("bigint"), F.lit(0).cast("bigint")
-                )
-            ).cast("bigint").alias("n_docs"),
-            "total_len",
-        )
-    )
-    scored = (
-        postings.join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(guarded_stats))
-        .select("doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id")
-    )
-    guard = _generation_coverage_guard(
-        postings,
-        stats_rows,
-        fields=(
-            ("doc_id", "bigint"),
-            ("tok", "string"),
-            ("sc", "double"),
-            ("batch_id", "int"),
-        ),
-    )
-    return (
-        _topk_from_scored(scored.unionByName(guard))
-        .select("doc_id", "n_terms_matched", "bm25_score")
-        .orderBy(F.desc("bm25_score"), F.asc("doc_id"))
-        .limit(k)
+    prefix it represents).  A store that has been ERASED refuses
+    (guards: :func:`_bm25_core`)."""
+    return _topk(
+        _bm25_core(spark, index_path, terms, upto_batch_id=upto_batch_id), k
     )
 
 
@@ -791,8 +833,8 @@ def bm25_batch_topk(
     (metadata-sized, the BPE-merge-artifact precedent), because a
     dynamic relation cannot become a parquet pushed filter; batch
     callers with static terms pass the literal and keep the plan
-    collect-free.  Same merge-on-read stats + fail-closed guards as
-    :func:`bm25_topk_merged`.
+    collect-free.  A query term missing from the literal raises
+    instead of silently contributing nothing.
 
     ``max_df_frac`` applies the hot-term bound (:func:`hot_term_filter`)
     to the batch's term union before the scan: stop-word-shaped terms
@@ -801,12 +843,8 @@ def bm25_batch_topk(
     are dropped by POLICY, not lost by a broken literal.
 
     ``attr_pred`` makes this the BATCH form of filtered keyword search
-    (``bm25_topk_filtered``'s serving twin, round 11): the
-    postings-layout attrs scan takes the SAME pushed term filter, the
-    predicate pushes into it, candidates semi-join the allowed set,
-    and scanned postings without an attrs twin raise (term-local
-    coverage tripwire).  Statistics stay corpus-global, per the
-    filtered-search contract."""
+    (``bm25_topk_filtered``'s serving twin).  Guards:
+    :func:`_bm25_core`."""
     from pyspark.sql import Window
 
     if terms_literal is None:
@@ -827,111 +865,35 @@ def bm25_batch_topk(
     qterms = queries.select(
         "qid", F.explode("terms").alias("tok")
     ).distinct()
-    # fail-closed on a broken terms_literal contract: a query term
-    # absent from the pushed IN list would silently contribute nothing
-    # to its query's ranking (the scan never reads its postings) —
-    # assert coverage on the broadcast-sized qterms relation instead
-    # (rides the same plan; the ivf_topk 0-row-union guard pattern).
+    # rides the broadcast-sized qterms relation
     uncovered = (
         qterms.where(~F.col("tok").isin([*terms_literal, *dropped]))
         .agg(F.count(F.lit(1)).cast("int").alias("_nu"))
     )
     qterms = qterms.unionByName(
-        uncovered.select(
-            F.assert_true(
-                F.col("_nu") == 0,
-                F.concat(
-                    F.col("_nu").cast("string"),
-                    F.lit(
-                        " query term(s) are missing from terms_literal "
-                        "— the pushed IN filter would silently exclude "
-                        "their postings from scoring; pass the union "
-                        "of ALL queries' terms (or None to derive it)"
-                    ),
+        guard_branch(
+            uncovered,
+            F.col("_nu") == 0,
+            F.concat(
+                F.col("_nu").cast("string"),
+                F.lit(
+                    " query term(s) are missing from terms_literal "
+                    "— the pushed IN filter would silently exclude "
+                    "their postings from scoring; pass the union "
+                    "of ALL queries' terms (or None to derive it)"
                 ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(
-            F.col("_a").cast("bigint").alias("qid"),
-            F.col("_a").cast("string").alias("tok"),
+            ),
+            (("qid", "bigint"), ("tok", "string")),
         )
     )
-    postings = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("tok").isin(terms_literal)
-    )
-    vocab = _merged_vocab(postings)
-    stats_rows = spark.read.parquet(f"{index_path}/stats")
-    stats = _merged_stats(stats_rows.drop("batch_id"))
-    attr_guard = None
-    scoring_postings = postings
-    if attr_pred is not None:
-        attrs = spark.read.parquet(f"{index_path}/attrs").where(
-            F.col("tok").isin(terms_literal)
-        )
-        allowed = attrs.where(attr_pred).select("doc_id").distinct()
-        uncovered = (
-            postings.select("tok", "doc_id")
-            .join(
-                attrs.select("tok", "doc_id"),
-                ["tok", "doc_id"],
-                "left_anti",
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("_nu"))
-        )
-        attr_guard = uncovered.select(
-            F.assert_true(
-                F.col("_nu") == 0,
-                F.concat(
-                    F.col("_nu").cast("string"),
-                    F.lit(
-                        " scanned posting row(s) have no attrs row — "
-                        "the text attr store is stale; re-run "
-                        "build_text_attr_store"
-                    ),
-                ),
-            ).alias("_a")
-        ).where(F.col("_a").isNotNull())
-        scoring_postings = postings.join(allowed, "doc_id", "left_semi")
-    scored = (
-        scoring_postings.join(F.broadcast(qterms), "tok")
-        .join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "qid", "doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id"
-        )
-    )
-    bfields = (
-        ("qid", "bigint"),
-        ("doc_id", "bigint"),
-        ("tok", "string"),
-        ("sc", "double"),
-        ("batch_id", "int"),
-    )
-    guard = _generation_coverage_guard(postings, stats_rows, bfields)
-    commit_guard = _correction_commit_guard(
-        spark, index_path, stats_rows, bfields
-    )
-    if attr_guard is not None:
-        scored = scored.unionByName(
-            attr_guard.select(
-                *[F.col("_a").cast(t).alias(n) for n, t in bfields]
-            )
-        )
-    agg = (
-        scored.unionByName(guard)
-        .unionByName(commit_guard)
-        .groupBy("qid", "doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_terms_matched"),
-            dsum(F.col("sc"), "bm25_score"),
-        )
+    matched = _bm25_core(
+        spark, index_path, terms_literal, attr_pred=attr_pred, qterms=qterms
     )
     w = Window.partitionBy("qid").orderBy(
         F.desc("bm25_score"), F.asc("doc_id")
     )
     return (
-        agg.withColumn("rank", F.row_number().over(w).cast("int"))
+        matched.withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= k)
         .select("qid", "doc_id", "n_terms_matched", "bm25_score", "rank")
     )
@@ -989,7 +951,6 @@ def build_text_attr_store(
         f"{index_path}/attrs",
     )
 
-
 def bm25_topk_filtered(
     spark: SparkSession,
     index_path: str,
@@ -1001,8 +962,7 @@ def bm25_topk_filtered(
     """FILTERED keyword search: :func:`bm25_topk_merged` restricted to
     documents whose attr rows satisfy ``attr_pred`` — the "search
     within lang='en'" query every retrieval stack serves daily, on the
-    text side (VERDICT r9 item 3; the ANN twin is
-    ``ann_index.pq_filtered_topk``).
+    text side (the ANN twin is ``ann_index.pq_filtered_topk``).
 
     Semantics (the standard filtered-search contract, replayed by the
     DuckDB oracle): the predicate restricts CANDIDATES, not
@@ -1017,161 +977,22 @@ def bm25_topk_filtered(
     left-semi join between two term-filtered relations.  No
     corpus-wide metadata join exists in the plan (pinned by pytest).
 
-    Fail-closed: a scanned posting row with no attrs twin raises (the
-    probe-time coverage tripwire for out-of-band writes — attrs are
-    otherwise maintained delta-shaped by the ingest/delete/upsert
-    paths), on top of the merged probe's duplicate-row and
-    generation-coverage guards.
-
     ``upto_batch_id`` composes filtered search with AS-OF time travel
-    (round 11 — "rank within lang='en' exactly as the index stood
-    after batch N"): the watermark partition-prunes the postings,
-    attrs AND stats scans (attrs ride the same ``batch_id``
-    generations, so one committed prefix covers both), df derives from
-    the watermarked scan, and — like ``bm25_topk_asof`` — an ERASED
-    store refuses (erasure corrections are global; no earlier view is
-    reconstructible by right-to-erasure contract), which also
-    subsumes the correction-commit guard below the watermark."""
-    from ..streaming.compaction import read_store_or_none
-
-    postings = spark.read.parquet(f"{index_path}/postings").where(
-        F.col("tok").isin(terms)
-    )
-    attrs = spark.read.parquet(f"{index_path}/attrs").where(
-        F.col("tok").isin(terms)
-    )
-    stats_rows = spark.read.parquet(f"{index_path}/stats")
-    evolve_guard = None
-    if upto_batch_id is not None:
-        wm = F.col("batch_id") <= F.lit(int(upto_batch_id))
-        postings = postings.where(wm)
-        attrs = attrs.where(wm)
-        stats_rows = stats_rows.where(wm)
-        # attr-evolution marker (add_doc_attr_column): the backfill
-        # wrote the new column into every historical generation, so a
-        # filtered as-of view below the evolve generation is a state
-        # that never existed — refuse, mirroring the ANN upsert/refit
-        # marker guard.  Absent marker store = no evolution ever ran
-        # (plan unchanged); metadata-sized when present.
-        evo = read_store_or_none(spark, f"{index_path}/attr_evolutions")
-        if evo is not None:
-            evolve_guard = (
-                evo.agg(F.max("batch_id").cast("int").alias("_mx"))
-                .select(
-                    F.assert_true(
-                        F.coalesce(
-                            F.col("_mx") <= F.lit(int(upto_batch_id)),
-                            F.lit(True),
-                        ),
-                        F.concat(
-                            F.lit(
-                                "filtered as-of probe: upto_batch_id="
-                            ),
-                            F.lit(str(int(upto_batch_id))),
-                            F.lit(
-                                " is below attr-evolution generation "
-                            ),
-                            F.col("_mx").cast("string"),
-                            F.lit(
-                                " — add_doc_attr_column backfilled "
-                                "the new column into every historical "
-                                "generation, so this filtered as-of "
-                                "view never existed; probe at or "
-                                "above the evolve generation, or the "
-                                "live index without a watermark"
-                            ),
-                        ),
-                    ).alias("_a")
-                )
-                .where(F.col("_a").isNotNull())
-            )  # shaped to `fields` below, once fields is defined
-        no_correction = F.assert_true(
-            F.col("_mn") >= 0,
-            F.lit(
-                "filtered as-of probe: the store holds erasure "
-                "correction generations — erasure is destructive (no "
-                "earlier view is reconstructible, by right-to-erasure "
-                "contract); probe the live index without a watermark"
-            ),
-        )
-        stats = (
-            stats_rows.agg(F.min("n_docs").alias("_mn"))
-            .crossJoin(_merged_stats(stats_rows.drop("batch_id")))
-            .select(
-                (
-                    F.col("n_docs")
-                    + F.coalesce(
-                        no_correction.cast("bigint"),
-                        F.lit(0).cast("bigint"),
-                    )
-                ).cast("bigint").alias("n_docs"),
-                "total_len",
-            )
-        )
-    else:
-        stats = _merged_stats(stats_rows.drop("batch_id"))
-    vocab = _merged_vocab(postings)
-    allowed = (
-        attrs.where(attr_pred).select("doc_id").distinct()
-    )
-    uncovered = (
-        postings.select("tok", "doc_id")
-        .join(
-            attrs.select("tok", "doc_id"), ["tok", "doc_id"], "left_anti"
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("_nu"))
-    )
-    fields = (
-        ("doc_id", "bigint"),
-        ("tok", "string"),
-        ("sc", "double"),
-        ("batch_id", "int"),
-    )
-    attr_guard = (
-        uncovered.select(
-            F.assert_true(
-                F.col("_nu") == 0,
-                F.concat(
-                    F.col("_nu").cast("string"),
-                    F.lit(
-                        " scanned posting row(s) have no attrs row — "
-                        "the text attr store is stale (an out-of-band "
-                        "writer appended postings without their "
-                        "attrs) and a filtered probe would silently "
-                        "drop those documents; re-run "
-                        "build_text_attr_store"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        .where(F.col("_a").isNotNull())
-        .select(*[F.col("_a").cast(t).alias(n) for n, t in fields])
-    )
-    scored = (
-        postings.join(allowed, "doc_id", "left_semi")
-        .join(F.broadcast(vocab), "tok")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "tok", bm25_score_expr().alias("sc"), "batch_id")
-    )
-    gen_guard = _generation_coverage_guard(postings, stats_rows, fields)
-    commit_guard = _correction_commit_guard(
-        spark, index_path, stats_rows, fields
-    )
-    if evolve_guard is not None:
-        scored = scored.unionByName(
-            evolve_guard.select(
-                *[F.col("_a").cast(t).alias(n) for n, t in fields]
-            )
-        )
-    return (
-        _topk_from_scored(
-            scored.unionByName(gen_guard)
-            .unionByName(attr_guard)
-            .unionByName(commit_guard)
-        )
-        .select("doc_id", "n_terms_matched", "bm25_score")
-        .orderBy(F.desc("bm25_score"), F.asc("doc_id"))
-        .limit(k)
+    ("rank within lang='en' exactly as the index stood after batch
+    N"): the watermark partition-prunes the postings, attrs AND stats
+    scans (attrs ride the same ``batch_id`` generations, so one
+    committed prefix covers both), df derives from the watermarked
+    scan, and — like ``bm25_topk_asof`` — an ERASED store refuses.
+    Guards: :func:`_bm25_core`."""
+    return _topk(
+        _bm25_core(
+            spark,
+            index_path,
+            terms,
+            upto_batch_id=upto_batch_id,
+            attr_pred=attr_pred,
+        ),
+        k,
     )
 
 

@@ -37,7 +37,7 @@ QUERIES: dict[str, QuerySpec] = {}
 # registry (50 entries observed in round 1), so ordering is evidence
 # policy: queries that still need a driver-green row go in front;
 # queries already proven green in a previous round rotate to the back
-# (tools/driver_sim.py + tests/test_oracle_parity.py keep them honest
+# (tools/gatecheck.py + tests/test_oracle_parity.py keep them honest
 # locally).  Keep this list at <= 50 names.
 FRONT: list[str] = [
     # --- ROUND-15 window (optimization round — no new queries, so
@@ -142,7 +142,7 @@ FRONT: list[str] = [
 # them to round 14's stale block.
 # VERIFY THE ARTIFACT RECORDS (round 10's AND round 12's windows were
 # silently lost driver-side; if r13's is too, ship
-# tools/driver_sim.py output as substitute evidence and escalate in
+# `tools/gatecheck.py run` output as substitute evidence and escalate in
 # ADVICE.md — round 13's substitute evidence lives in COVERAGE.md's
 # closing-gates paragraphs: driver_sim 265/265 ALL MATCH at the
 # pre-addendum HEAD plus spot-check MATCH rows for the two late
@@ -155,7 +155,7 @@ FRONT: list[str] = [
 # that fully supersedes its surface: the twin exercises the same
 # operator chain plus the fitted/persisted/indexed machinery the demo
 # stubs out, so driver-green evidence on the twin covers the demo's
-# semantics.  Exempt names STAY registered — tools/driver_sim.py and
+# semantics.  Exempt names STAY registered — tools/gatecheck.py and
 # tests/test_oracle_parity.py still hash-check them every round — they
 # just never re-enter FRONT, shrinking the rotation pool the window
 # must cover.

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.core import sql_davg
+from ..functions.guards import guard_branch
 from ..functions.vectors import QV, norm2
 from ..operators.similarity import (
     NUM_HYPERPLANES,
@@ -1117,34 +1118,19 @@ def _pq_adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("cid"), "s", F.col("sub").alias("ce"))
     expected = _PQ_SUBS * 8  # 8 seed vectors x 8 subspace slices each
     ncent = cents.agg(F.count(F.lit(1)).cast("int").alias("_ncent"))
-    guard = (
-        ncent.select(
-            F.assert_true(
-                F.col("_ncent") == expected,
-                F.concat(
-                    F.lit("PQ codebook has "),
-                    F.col("_ncent").cast("string"),
-                    F.lit(
-                        f" subspace entries, expected {expected} — the "
-                        "corpus lacks (some of) the seed vec_ids 10..17; "
-                        "refusing to ADC-scan against a broken codebook"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        # always-false predicate whose evaluation forces _a (see the
-        # ivf_topk guard for the constant-folding caveat + tripwire).
-        # The output columns are cast FROM _a (always-null but
-        # non-foldable) rather than lit(None): callers join this union
-        # on vec_id, and the pushed-down isnotnull(vec_id) filter would
-        # constant-fold a literal-null branch — assert_true and all —
-        # clean out of the plan (round-6 lesson; the pytest below is
-        # the tripwire).
-        .where(F.col("_a").isNotNull())
-        .select(
-            F.col("_a").cast("long").alias("vec_id"),
-            F.col("_a").cast("bigint").alias("adc_dist"),
-        )
+    guard = guard_branch(
+        ncent,
+        F.col("_ncent") == expected,
+        F.concat(
+            F.lit("PQ codebook has "),
+            F.col("_ncent").cast("string"),
+            F.lit(
+                f" subspace entries, expected {expected} — the "
+                "corpus lacks (some of) the seed vec_ids 10..17; "
+                "refusing to ADC-scan against a broken codebook"
+            ),
+        ),
+        (("vec_id", "long"), ("adc_dist", "bigint")),
     )
     corp = _pq_subspaces(emb.where(F.col("vec_id") != 0))
     scored = corp.join(F.broadcast(cents), "s").select(

@@ -299,8 +299,7 @@ def stream_dedup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "query; latest emission per user = final totals.  Round 7 upgraded "
     "this from rows-only to hash-checked: the state accumulates exact "
     "nano-quantized BIGINTs (order-independent across any micro-batch "
-    "split — the stateful_v2 contract back-ported), so the streamed "
-    "totals equal the SQL oracle bit-for-bit",
+    "split), so the streamed totals equal the SQL oracle bit-for-bit",
     tags=("streaming", "stateful", "applyInPandasWithState"),
 )
 def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.guards import guard_branch
 from ..operators.dedup import banded_signatures, minhash_signatures
 from .compaction import erase_rows, read_store_or_none, write_generation
 
@@ -252,43 +253,28 @@ def dedup_batch_verified(
             ).alias("_n_dupid"),
         )
     )
-    guard = (
-        cover.select(
-            F.assert_true(
-                (F.col("_n_missing") == 0) & (F.col("_n_dupid") == 0),
-                F.concat(
-                    F.lit("verified dedup contract violation: "),
-                    F.col("_n_missing").cast("string"),
-                    F.lit(
-                        " candidate doc(s) have no text in the "
-                        "batch+accepted relation (partially trimmed "
-                        "accepted-docs output — verification would fail "
-                        "open and admit their duplicates) and "
-                    ),
-                    F.col("_n_dupid").cast("string"),
-                    F.lit(
-                        " candidate doc_id(s) appear more than once "
-                        "(globally-unique doc_id ingest contract broken "
-                        "— the shingle relation is ambiguous); restore "
-                        "the accepted output / fix the id assignment "
-                        "before resuming"
-                    ),
-                ),
-            ).alias("_a")
-        )
-        # always-false predicate whose evaluation forces _a (see the
-        # ivf_topk guard for the constant-folding caveat + tripwire).
-        # Output columns are cast FROM _a (always-null, non-foldable)
-        # instead of lit(None): a downstream join's pushed-down
-        # isnotnull filter would constant-fold a literal-null branch —
-        # assert_true and all — out of the plan (round-6 lesson).
-        .where(F.col("_a").isNotNull())
-        .select(
-            *[
-                F.col("_a").cast(f.dataType).alias(f.name)
-                for f in batch.schema.fields
-            ]
-        )
+    guard = guard_branch(
+        cover,
+        (F.col("_n_missing") == 0) & (F.col("_n_dupid") == 0),
+        F.concat(
+            F.lit("verified dedup contract violation: "),
+            F.col("_n_missing").cast("string"),
+            F.lit(
+                " candidate doc(s) have no text in the "
+                "batch+accepted relation (partially trimmed "
+                "accepted-docs output — verification would fail "
+                "open and admit their duplicates) and "
+            ),
+            F.col("_n_dupid").cast("string"),
+            F.lit(
+                " candidate doc_id(s) appear more than once "
+                "(globally-unique doc_id ingest contract broken "
+                "— the shingle relation is ambiguous); restore "
+                "the accepted output / fix the id assignment "
+                "before resuming"
+            ),
+        ),
+        batch.schema,
     )
     sh = doc_shingles(sides.join(cand_ids, "doc_id", "left_semi"))
     verified = jaccard_verify_candidates(sh, cands, min_jaccard)

@@ -8,8 +8,7 @@ the user appears — the engine-native version of the reference's
 ``INCRBY eng10m:{id}`` counter (reference pipeline/app.py:92-95),
 checkpointable and replayable instead of fire-and-forget.
 
-The running sum is kept in exact nano-unit int64 (round 7, the
-stateful_v2.py contract back-ported to the executable v1): float
+The running sum is kept in exact nano-unit int64 (round 7): float
 accumulation order varies with micro-batching, so a double state can
 drift a ulp between a 2-batch stream and the batch groupBy — the
 quantized BIGINT state is order-independent, which is what upgraded

@@ -23,9 +23,10 @@ def spark():
     # wall-clock.  Results are partition-count-independent by the
     # repo's own determinism discipline (quantized dsum/davg, ordered
     # collects) — the same 8-partition session shape
-    # tools/driver_sim_fast.py used to prove 302/302 oracle parity in
-    # r14 — and the bench/production sessions keep the CPU-matched
-    # default (this is a test-harness setting, not an engine conf).
+    # `tools/gatecheck.py run --fast` uses (it proved 302/302 oracle
+    # parity in r14) — and the bench/production sessions keep the
+    # CPU-matched default (this is a test-harness setting, not an
+    # engine conf).
     spark = get_spark(
         app_name="eventstream-fanout-tests",
         shuffle_partitions=int(

@@ -415,10 +415,16 @@ def test_fitted_quantizer_persists_and_probes(spark, tmp_path):
 def test_probe_refuses_duplicated_generation_vector(spark, tmp_path):
     """A vec_id present in two index generations (re-ingested id or a
     probe racing a crashed compaction) would silently double its ADC
-    sum — the in-row code-count guard must raise instead, and
-    compact_index (which dedupes) must heal the store."""
+    sum — the in-row code-count guard must raise through every ADC
+    probe (single, filtered, batch), and compact_index (which
+    dedupes) must heal the store."""
     import pytest
 
+    from eventstream_fanout_spark.operators.ann_index import (
+        build_attr_store,
+        pq_batch_probe_topk,
+        pq_filtered_topk,
+    )
     from eventstream_fanout_spark.streaming.ann_ingest import (
         compact_index,
         streaming_ann_index_sink,
@@ -430,12 +436,23 @@ def test_probe_refuses_duplicated_generation_vector(spark, tmp_path):
     # operator error: vector 42 re-sent under a new batch id
     sink = streaming_ann_index_sink(path)
     sink(emb.where(F.col("vec_id") == 42).select("vec_id", "embedding"), 7)
+    # attrs for every stored code row, both generations of 42 included
+    build_attr_store(spark, emb.select("vec_id", "label"), path)
+    queries = _query(spark).select(F.lit(10**9).alias("qid"), "embedding")
+    pred = F.col("label").isNotNull()
 
-    with pytest.raises(Exception, match="multiple index generations"):
-        pq_probe_topk(spark, path, _query(spark), 10).collect()
+    for probe in (
+        lambda: pq_probe_topk(spark, path, _query(spark), 10),
+        lambda: pq_filtered_topk(spark, path, _query(spark), 10, pred),
+        lambda: pq_batch_probe_topk(spark, path, queries, 10),
+        lambda: pq_batch_probe_topk(spark, path, queries, 10, attr_pred=pred),
+    ):
+        with pytest.raises(Exception, match="multiple index generations"):
+            probe().collect()
 
     # compaction dedupes the store; probing works again
-    assert compact_index(spark, path, upto_batch_id=8) == 2
+    # 2 codes partitions + their 2 attrs twins
+    assert compact_index(spark, path, upto_batch_id=8) == 4
     assert len(pq_probe_topk(spark, path, _query(spark), 10).collect()) == 10
 
 

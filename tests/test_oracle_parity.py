@@ -19,7 +19,7 @@ import pytest
 # This module's sweep defaults to sf0.001 (r15, VERDICT r14 item 6 —
 # the driver-side pytest run outgrew its window and was truncated):
 # the 306-check parity sweep at sf0.01 is exactly what the driver's
-# own correctness gate and tools/driver_sim*.py already run; the
+# own correctness gate and tools/gatecheck.py already run; the
 # pytest sweep's job is catching LOGIC drift early, which the smallest
 # deterministic SF does in a fraction of the time.  Override with
 # SPARK_GRAFT_PARITY_SF_DIR for a full-fidelity local run.

@@ -157,96 +157,6 @@ def test_observation_metrics_zero_extra_pass(spark):
     assert got["null_values"] >= 0
 
 
-def test_transform_with_state_plan_and_batch_fallback(spark, tmp_path):
-    """Spark 4 transformWithState flavor of the running-totals operator:
-    the streaming plan must analyze down to the TransformWithState
-    physical node, and the batch fallback must produce the exact
-    quantized totals.  Full stream-vs-batch equivalence self-activates
-    only where the protobuf state-server runtime exists (this container
-    ships none — declared gap, same policy as media decode)."""
-    import os
-
-    from eventstream_fanout_spark.streaming.stateful_v2 import (
-        QV,
-        running_user_totals_v2,
-        tws_runtime_available,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-
-    # 1. streaming plan constructs + analyzes (no execution needed)
-    src = str(tmp_path / "tws_src")
-    os.makedirs(src)
-    events.toPandas().to_parquet(f"{src}/a.parquet", index=False)
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{src}/a.parquet").schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    totals = running_user_totals_v2(stream)
-    assert totals.isStreaming
-    plan = totals._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithState" in plan
-    assert totals.schema.simpleString() == (
-        "struct<user_id:bigint,n_events:bigint,total_value:double>"
-    )
-
-    # 2. batch fallback: exact quantized totals
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in running_user_totals_v2(events).collect()
-    }
-    expect = {
-        r["user_id"]: (
-            r["n"],
-            r["q"] / QV,
-        )
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(
-                    F.nanvl(
-                        F.coalesce(F.col("value"), F.lit(0.0)), F.lit(0.0)
-                    )
-                    * F.lit(QV)
-                    + F.lit(0.5)
-                ).cast("long")
-            ).alias("q"),
-        )
-        .collect()
-    }
-    assert got == expect
-
-    # 3. full stream equivalence where the runtime exists
-    if not tws_runtime_available():
-        return
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_eq")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        final = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.table("tws_eq")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .collect()
-        }
-    finally:
-        q.stop()
-    assert final == got
-
-
 def test_theta_sketch_estimates_bounded(spark):
     """The sandwich query's exact set-op cardinalities must equal
     independently-computed set sizes, its 5% boolean must hold, and the

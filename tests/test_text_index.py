@@ -282,14 +282,53 @@ def test_ingest_sink_accepts_int_doc_ids_against_long_store(
         sink(as_int(docs.where(F.col("doc_id") == 2)), 2)
 
 
+def _build_attrs(spark, path):
+    """The filtered probes' postings-layout attrs store, from the
+    documents' ``lang``."""
+    from eventstream_fanout_spark.operators.text_index import (
+        build_text_attr_store,
+    )
+
+    build_text_attr_store(
+        spark, _docs_with_lang(spark).select("doc_id", "lang"), path
+    )
+
+
+def _guarded_probes(upto_batch_id):
+    """Every merge-on-read BM25 entry point as ``probe(spark, path,
+    terms, k)``: merged, as-of (at ``upto_batch_id``), batch and
+    filtered.  A store guard must refuse through each of them."""
+    from eventstream_fanout_spark.operators.text_index import (
+        bm25_batch_topk,
+        bm25_topk_asof,
+        bm25_topk_filtered,
+        bm25_topk_merged,
+    )
+
+    def batch(spark, path, terms, k):
+        q = spark.createDataFrame([(1, terms)], "qid bigint, terms array<string>")
+        return bm25_batch_topk(spark, path, q, k)
+
+    def asof(spark, path, terms, k):
+        return bm25_topk_asof(spark, path, terms, k, upto_batch_id)
+
+    def filtered(spark, path, terms, k):
+        return bm25_topk_filtered(
+            spark, path, terms, k, F.col("lang").isNotNull()
+        )
+
+    return (bm25_topk_merged, asof, batch, filtered)
+
+
 def test_merged_probe_refuses_duplicated_generation_doc(spark, tmp_path):
     """A doc_id present in two index generations (a crashed compaction
     mid-fold, or an ingest that bypassed the uniqueness gate) silently
     doubles that doc's score rows — the per-(tok, doc_id) uniqueness
-    guard on the term-filtered scan must raise, and compact_text_index
-    (which dedupes on the natural keys) must heal.  The guard is
-    candidate-scoped, so the fixture duplicates a doc that contains a
-    query term."""
+    guard on the term-filtered scan must raise through every
+    merge-on-read probe (merged, as-of, batch, filtered), and
+    compact_text_index (which dedupes on the natural keys) must heal.
+    The guard is candidate-scoped, so the fixture duplicates a doc
+    that contains a query term."""
     from eventstream_fanout_spark.operators.text_index import (
         bm25_topk_merged,
     )
@@ -305,11 +344,16 @@ def test_merged_probe_refuses_duplicated_generation_doc(spark, tmp_path):
     # bypass the write-time gate: the crashed-compaction simulation
     sink = streaming_text_index_sink(path, enforce_unique_doc_ids=False)
     sink(docs.where(F.col("doc_id") == dup_id), 9)
+    # attrs for every stored posting row (both generations), so the
+    # filtered probes reach the duplicate-row guard
+    _build_attrs(spark, path)
 
-    with pytest.raises(Exception, match="duplicated \\(tok, doc_id\\)"):
-        bm25_topk_merged(spark, path, ["spark"], 10).collect()
+    for probe in _guarded_probes(upto_batch_id=9):
+        with pytest.raises(Exception, match="duplicated \\(tok, doc_id\\)"):
+            probe(spark, path, ["spark"], 10).collect()
 
-    assert compact_text_index(spark, path, upto_batch_id=10) == 4
+    # 4 folded index partitions + the attrs store's 2 generations
+    assert compact_text_index(spark, path, upto_batch_id=10) == 6
     rows = bm25_topk_merged(spark, path, ["spark"], 10).collect()
     assert len(rows) == 10
 
@@ -328,17 +372,22 @@ def test_merged_probe_refuses_postings_without_stats(spark, tmp_path):
         streaming_text_index_sink,
     )
 
-    docs = _docs(spark)
+    docs = _docs_with_lang(spark)
     path = str(tmp_path / "tidx")
-    build_text_index(spark, docs.where(F.col("doc_id") % 2 == 0), path)
+    build_text_index(
+        spark, docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text"),
+        path,
+    )
+    _build_attrs(spark, path)
     sink = streaming_text_index_sink(path)
     odd = docs.where(F.col("doc_id") % 2 == 1)
-    sink(odd, 1)
+    sink(odd, 1)  # carries lang: the attrs store stays covered
     # simulate the crash: batch 1's stats (and doclens) never landed
     shutil.rmtree(f"{path}/stats/batch_id=1")
     shutil.rmtree(f"{path}/doclens/batch_id=1")
-    with pytest.raises(Exception, match="no stats row"):
-        bm25_topk_merged(spark, path, ["spark", "window"], 10).collect()
+    for probe in _guarded_probes(upto_batch_id=1):
+        with pytest.raises(Exception, match="no stats row"):
+            probe(spark, path, ["spark", "window"], 10).collect()
 
     # replay of the same batch id heals the stores
     sink(odd, 1)
@@ -1535,13 +1584,19 @@ def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
     BEFORE its tombstone commit leaves the corrected rollup live while
     the doomed postings still score — previously undetected (the
     correction generation HAS its stats row and no postings).  The
-    correction-commit guard must now raise through the merged AND
-    static probes, and re-running the same delete_docs heals.  The
+    correction-commit guard must raise through every unwatermarked
+    probe (static, merged, batch, filtered, and the hybrid batch over
+    the batch probe), a watermarked filtered probe refuses through its
+    no-correction guard, and re-running the same delete_docs heals.  The
     crash is injected into delete_docs itself: its generation writer
     fails on the tombstone write."""
     import os
 
+    from eventstream_fanout_spark.operators.ann_index import build_pq_index
+    from eventstream_fanout_spark.operators.hybrid import hybrid_batch_rrf
     from eventstream_fanout_spark.operators.text_index import (
+        bm25_batch_topk,
+        bm25_topk_filtered,
         bm25_topk_merged,
     )
     from eventstream_fanout_spark.streaming.text_ingest import delete_docs
@@ -1549,6 +1604,14 @@ def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
     docs = _docs(spark)
     path = str(tmp_path / "tidx")
     build_text_index(spark, docs, path)
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    apath = str(tmp_path / "aidx")
+    build_pq_index(spark, emb, apath)
+    qvec = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
+    queries = spark.createDataFrame(
+        [(10**9, TERMS, qvec)],
+        "qid bigint, terms array<string>, embedding array<float>",
+    )
     doomed = [
         int(r["doc_id"])
         for r in docs.where(F.col("doc_id") % 5 == 2)
@@ -1567,9 +1630,23 @@ def test_crashed_erasure_after_stats_before_tombstone_fails_closed(
     assert len(gens - {-1}) == 1
     assert _generations(spark, f"{path}/vocab") == gens
     assert not os.path.exists(f"{path}/tombstones")
-    for probe in (bm25_topk, bm25_topk_merged):
+    _build_attrs(spark, path)
+    en = F.col("lang") == "en"
+    refusing = (
+        lambda: bm25_topk(spark, path, TERMS, 10),
+        lambda: bm25_topk_merged(spark, path, TERMS, 10),
+        lambda: bm25_batch_topk(spark, path, queries.select("qid", "terms"), 10),
+        lambda: bm25_topk_filtered(spark, path, TERMS, 10, en),
+        lambda: hybrid_batch_rrf(spark, path, apath, queries),
+    )
+    for probe in refusing:
         with pytest.raises(Exception, match="no tombstone commit"):
-            probe(spark, path, TERMS, 10).collect()
+            probe().collect()
+    # a watermarked probe refuses the same store through its
+    # no-correction guard (the correction generation is negative, so
+    # it lies below every non-negative watermark)
+    with pytest.raises(Exception, match="erasure is destructive"):
+        bm25_topk_filtered(spark, path, TERMS, 10, en, upto_batch_id=0).collect()
 
     # re-run heals: the orphan correction is overwritten in place and
     # the tombstone lands; the probe equals an index that never

@@ -1,13 +1,27 @@
-"""Shared canonicalization for the local correctness gates
-(driver_sim.py = full registry, spot_check.py = named queries).
+"""The local correctness gate: every registered query (or a named
+subset) run on Spark and compared with its DuckDB oracle.
 
-ONE implementation of the driver's comparison rules so the two tools
-cannot drift: order-insensitive value hashing over collect()/fetchall()
-rows (floats via exact repr, timestamps ISO, Decimal normalized), plus
-the pandas-dtype-path checks the real harness implies (HUGEINT->float64
-kind mismatches, unhashable array cells).  Both paths run on purpose —
-the fetchall hash catches value-level divergence, the pandas pass
-catches dtype/rendering divergence the hash alone missed in round 1.
+    python tools/gatecheck.py run                 # the full gate
+    python tools/gatecheck.py run --front         # the FRONT slots
+    python tools/gatecheck.py run q1 q2 ...       # named queries
+    python tools/gatecheck.py run --fast ...      # small-shuffle session
+    python tools/gatecheck.py gate-line "<pytest>" "<front>" [rows]
+
+``run`` exits 1 on any mismatch or error.  Its default session is
+deliberately vanilla (no UTC tz, no tuned confs) so
+``__spark_entry__``'s ``apply_engine_conf`` is exercised exactly as the
+entry contract's caller does; ``--fast`` adds 8 shuffle partitions +
+AQE for iteration (results are hashed order-insensitively, so
+partitioning cannot change a verdict).  A full-registry run also
+smoke-tests ``entry()`` at the same SF.
+
+ONE implementation of the contract's comparison rules: order-insensitive
+value hashing over collect()/fetchall() rows (floats via exact repr,
+timestamps ISO, Decimal normalized), plus the pandas-dtype-path checks
+the real harness implies (HUGEINT->float64 kind mismatches, unhashable
+array cells).  Both paths run on purpose — the fetchall hash catches
+value-level divergence, the pandas pass catches dtype/rendering
+divergence the hash alone missed in round 1.
 """
 from __future__ import annotations
 
@@ -128,10 +142,11 @@ def gate_line(
     SHIPPED registry by construction (VERDICT r8 item 8: the
     hand-written line drifted from the registry twice) — query/oracle/
     FRONT counts are read from the code; the run outcomes (pytest,
-    front_check, entry smoke) are passed in from the actual runs.
+    ``gatecheck.py run --front``, entry smoke) are passed in from the
+    actual runs.
 
-        python tools/gatecheck.py "<pytest summary>" "<front result>" \\
-            [entry_rows]
+        python tools/gatecheck.py gate-line "<pytest summary>" \\
+            "<front result>" [entry_rows]
     """
     import datetime
 
@@ -151,7 +166,7 @@ def gate_line(
     return (
         f"Closing gates (generated by tools/gatecheck.gate_line from "
         f"the shipped registry, {today}): full pytest "
-        f"**{pytest_result}**, `tools/front_check.py` (no args = the "
+        f"**{pytest_result}**, `tools/gatecheck.py run --front` (the "
         f"{len(FRONT)}-slot FRONT) **{front_result}** at sf0.01, "
         f"{entry}{len(qs)} queries / {n_oracle} oracles), COVERAGE "
         f"rotation bullet generated by tools/rotation_bullet.py (not "
@@ -159,18 +174,92 @@ def gate_line(
     )
 
 
-if __name__ == "__main__":
-    import os as _os
-    import sys as _sys
+def session(fast: bool, cpus: int):
+    """The gate's SparkSession: vanilla, or tuned for small SFs."""
+    from pyspark.sql import SparkSession
 
-    _sys.path.insert(
-        0,
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    )
-    print(
-        gate_line(
-            _sys.argv[1] if len(_sys.argv) > 1 else "<pytest result>",
-            _sys.argv[2] if len(_sys.argv) > 2 else "<front result>",
-            int(_sys.argv[3]) if len(_sys.argv) > 3 else None,
+    b = SparkSession.builder.master(f"local[{cpus}]").appName("gatecheck")
+    if fast:
+        b = (
+            b.config("spark.sql.shuffle.partitions", "8")
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+            .config("spark.ui.enabled", "false")
         )
+    return b.getOrCreate()
+
+
+def run(names: list[str] | None, sf_dir: str, fast: bool, cpus: int) -> int:
+    """Check ``names`` (None = the whole registry, plus the entry()
+    smoke); returns the number of failures."""
+    import time
+
+    import __spark_entry__ as E
+
+    spark = session(fast, cpus)
+    qs, oracles = E.queries(), E.oracle_sql()
+    if names is None:
+        n = E.entry(spark).count()
+        print(f"entry(): {n} rows")
+        names = list(qs)
+    con = connect_oracle(sf_dir)
+    fails = 0
+    for name in names:
+        t0 = time.perf_counter()
+        if name not in qs:
+            ok, lines = False, [f"{name}: NOT IN queries() — FAIL"]
+        else:
+            try:
+                ok, lines = check_query(
+                    con, name, qs[name], oracles.get(name), spark, sf_dir
+                )
+            except Exception as exc:  # noqa: BLE001 — report, keep checking
+                ok = False
+                lines = [f"{name}: ERROR {type(exc).__name__}: {str(exc)[:300]}"]
+        lines[0] += f" [{time.perf_counter() - t0:.1f}s]"
+        print("\n".join(lines), flush=True)
+        fails += not ok
+    print(
+        "RESULT:",
+        "ALL MATCH" if fails == 0 else f"{fails} FAILURES",
+        f"({len(names)} checked)",
     )
+    return fails
+
+
+def main(argv: list[str]) -> int:
+    import argparse
+
+    from tests.conftest import SF_ORACLE
+
+    ap = argparse.ArgumentParser(prog="gatecheck")
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    r = sub.add_parser("run", help="queries vs DuckDB oracles")
+    r.add_argument("names", nargs="*", help="query names (default: all)")
+    r.add_argument("--front", action="store_true", help="the FRONT slots")
+    r.add_argument("--fast", action="store_true", help="small-shuffle session")
+    r.add_argument("--sf", default=SF_ORACLE, help="the test suite's SF")
+    r.add_argument("--cpus", type=int, default=8)
+    g = sub.add_parser("gate-line", help="print the COVERAGE gates line")
+    g.add_argument("pytest_result")
+    g.add_argument("front_result")
+    g.add_argument("entry_rows", nargs="?", type=int)
+    a = ap.parse_args(argv)
+    if a.cmd == "gate-line":
+        print(gate_line(a.pytest_result, a.front_result, a.entry_rows))
+        return 0
+    if a.front:
+        from eventstream_fanout_spark.plans.registry import FRONT
+
+        names = list(FRONT)
+    else:
+        names = a.names or None
+    return 1 if run(names, a.sf, a.fast, a.cpus) else 0
+
+
+if __name__ == "__main__":
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    sys.exit(main(sys.argv[1:]))

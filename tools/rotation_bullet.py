@@ -114,7 +114,7 @@ def main() -> None:
         lines.append(
             f"  Rotation-exempt ({len(ROTATION_EXEMPT)} superseded demo "
             "shapes, registry.ROTATION_EXEMPT — still hash-checked by "
-            "driver_sim/test_oracle_parity every round, never re-enter "
+            "gatecheck/test_oracle_parity every round, never re-enter "
             "FRONT): "
             + ", ".join(
                 f"{n} -> {t}" for n, t in sorted(ROTATION_EXEMPT.items())
